@@ -244,20 +244,27 @@ def pipeline_incremental_run(spark, sf):
         F.col("text").alias("text_column"),
         F.when(F.col("doc_id") % 3 == 0, 0).otherwise(1).alias("processed"),
     )
-    with _few_partitions(spark):
-        inc.init_source(spark, src, src_path)
-        n_first = inc.run_increment(spark, src_path, res_path)
-        n_second = inc.run_increment(spark, src_path, res_path)
-    assert n_first > 0 and n_second == 0, (n_first, n_second)
-    out = (
-        spark.read.schema(SENTIMENT_RESULTS)
-        .parquet(res_path)
-        .select(
-            "record_id", "sentiment", F.round("confidence", 6).alias("confidence")
+    try:
+        with _few_partitions(spark):
+            inc.init_source(spark, src, src_path)
+            n_first = inc.run_increment(spark, src_path, res_path)
+            n_second = inc.run_increment(spark, src_path, res_path)
+        if n_first == 0 or n_second != 0:
+            raise RuntimeError(
+                f"incremental run not idempotent: first run inserted {n_first}"
+                f" rows (want > 0), second run {n_second} (want 0)"
+            )
+        out = (
+            spark.read.schema(SENTIMENT_RESULTS)
+            .parquet(res_path)
+            .select(
+                "record_id", "sentiment",
+                F.round("confidence", 6).alias("confidence"),
+            )
         )
-    )
-    rows = out.collect()  # materialize before the temp dir is removed
-    _sh.rmtree(base, ignore_errors=True)
+        rows = out.collect()  # materialize before the temp dir is removed
+    finally:
+        _sh.rmtree(base, ignore_errors=True)
     return spark.createDataFrame(rows, out.schema)
 
 

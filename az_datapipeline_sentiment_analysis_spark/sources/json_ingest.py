@@ -57,8 +57,14 @@ def bronze_from_json_strings(df: DataFrame, col: str = "payload") -> DataFrame:
     )
 
 
-def _nullify_empty(c: str) -> Column:
-    return F.when(F.col(c) == "", None).otherwise(F.col(c)).alias(c)
+def _typed(c: str) -> Column:
+    """A review field under the silver type discipline."""
+    src = F.col(f"r.{c}")
+    if c in _EMPTY_AS_NULL:
+        return F.when(src == "", None).otherwise(src).alias(c)
+    if c in _BOOL_FLAGS:
+        return src.cast("boolean").alias(c)
+    return src.alias(c)
 
 
 def silver_reviews(bronze: DataFrame) -> DataFrame:
@@ -69,25 +75,23 @@ def silver_reviews(bronze: DataFrame) -> DataFrame:
     ``hotelier_response_date`` epoch-seconds -> timestamp, int flags ->
     boolean, ``""`` -> NULL on text fields. Nested ``author`` /
     ``stayed_room_info`` structs are preserved as struct columns.
+
+    One ``select`` over the exploded records: the review fields in
+    payload order, then the derived columns.
     """
-    r = bronze.select(F.explode("result").alias("r")).select("r.*")
-    out = r.select(
-        *[
-            _nullify_empty(c) if c in _EMPTY_AS_NULL else F.col(c)
-            for c in r.columns
-        ]
-    )
-    for flag in _BOOL_FLAGS:
-        out = out.withColumn(flag, F.col(flag).cast("boolean"))
-    return (
-        out.withColumn("review_ts", F.to_timestamp("date"))
-        .withColumn(
-            "hotelier_response_ts",
-            F.to_timestamp(F.from_unixtime("hotelier_response_date")),
-        )
-        .withColumn("checkin", F.to_date("stayed_room_info.checkin"))
-        .withColumn("checkout", F.to_date("stayed_room_info.checkout"))
-        .withColumn("stay_nights", F.datediff("checkout", "checkin"))
+    exploded = bronze.select(F.explode("result").alias("r"))
+    fields = exploded.schema["r"].dataType.fieldNames()
+    checkin = F.to_date("r.stayed_room_info.checkin")
+    checkout = F.to_date("r.stayed_room_info.checkout")
+    return exploded.select(
+        *[_typed(c) for c in fields],
+        F.to_timestamp("r.date").alias("review_ts"),
+        F.to_timestamp(F.from_unixtime("r.hotelier_response_date")).alias(
+            "hotelier_response_ts"
+        ),
+        checkin.alias("checkin"),
+        checkout.alias("checkout"),
+        F.datediff(checkout, checkin).alias("stay_nights"),
     )
 
 

@@ -27,6 +27,7 @@ import os
 import shutil
 import uuid
 
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -88,8 +89,8 @@ def _atomic_overwrite(spark: SparkSession, df: DataFrame, path: str) -> None:
             f"another writer holds {lock}; concurrent overwrites of "
             f"{path} are not supported by the parquet stand-in"
         ) from None
+    staged = f"{path}__stage_{uuid.uuid4().hex[:8]}"
     try:
-        staged = f"{path}__stage_{uuid.uuid4().hex[:8]}"
         df.write.mode("overwrite").parquet(staged)
         backup = f"{path}__old_{uuid.uuid4().hex[:8]}"
         if os.path.exists(path):
@@ -98,6 +99,9 @@ def _atomic_overwrite(spark: SparkSession, df: DataFrame, path: str) -> None:
         if os.path.exists(backup):
             shutil.rmtree(backup, ignore_errors=True)
     finally:
+        # a failed write leaves its partial stage behind; after the swap
+        # the stage is gone and this is a no-op
+        shutil.rmtree(staged, ignore_errors=True)
         os.rmdir(lock)
 
 
@@ -107,20 +111,52 @@ def merge_results(
     """Idempotent append: only record_ids not already present land.
 
     Equivalent to ``MERGE INTO results USING new ON record_id WHEN NOT
-    MATCHED THEN INSERT``. The anti-join is a broadcast when the new
-    batch is small (typical increment), a shuffle join otherwise —
-    Catalyst/AQE picks.
+    MATCHED THEN INSERT``, run as one write job:
+
+    1. the existing ``record_id``s that collide with the new ones — a
+       semi-join that streams the results table past the (small) new
+       ids, instead of building a hash table of the whole table;
+    2. the new rows anti-joined against only those collisions;
+    3. written to a staging directory and counted from the written
+       files' parquet footers (no persist/count pass); the ``part-``
+       files move into ``results_path`` only when the count is
+       positive, so a merge that inserts nothing adds no files.
+
+    The count is not a ``DataFrame.observe``: on Spark 4.1 a session
+    that has used an ``Observation`` holds a non-serializable
+    ``ObservationManager``, and later jobs whose closures capture the
+    session (MLlib training) fail with ``Task not serializable``.
+
+    Join strategies stay with Catalyst/AQE. A crash part-way through
+    the move leaves some rows landed and the rest in the discarded
+    stage; the next run's anti-join drops the landed ones, so re-running
+    converges without duplicates. Does not deduplicate ids within
+    ``new_results`` itself.
+
+    Returns the number of rows that landed.
     """
+    fresh = new_results
     if os.path.exists(results_path):
         existing = spark.read.schema(SENTIMENT_RESULTS).parquet(results_path)
-        fresh = new_results.join(existing, "record_id", "left_anti")
-    else:
-        fresh = new_results
-    fresh = fresh.persist()
-    n = fresh.count()
-    if n > 0:
-        fresh.write.mode("append").parquet(results_path)
-    fresh.unpersist()
+        collisions = existing.select("record_id").join(
+            new_results.select("record_id"), "record_id", "left_semi"
+        )
+        fresh = new_results.join(collisions, "record_id", "left_anti")
+    staged = f"{results_path}__stage_{uuid.uuid4().hex[:8]}"
+    try:
+        fresh.write.parquet(staged)
+        parts = [f for f in os.listdir(staged) if f.startswith("part-")]
+        n = sum(
+            pq.read_metadata(os.path.join(staged, f)).num_rows for f in parts
+        )
+        if n > 0:
+            os.makedirs(results_path, exist_ok=True)
+            for f in parts:
+                os.replace(
+                    os.path.join(staged, f), os.path.join(results_path, f)
+                )
+    finally:
+        shutil.rmtree(staged, ignore_errors=True)
     return n
 
 
@@ -160,11 +196,25 @@ def run_increment(
     Returns the number of NEWLY inserted result rows. Re-running after
     any partial failure converges to the same end state (idempotence is
     what the reference's dual-commit lacks).
+
+    The scoring stage is sized by rows, not by the source's splits: the
+    pending rows are counted (the same scan is the empty short-circuit)
+    and coalesced to one partition per Arrow batch
+    (``spark.sql.execution.arrow.maxRecordsPerBatch``). A Python task
+    has a fixed start-up cost whatever its row count, so a small delta
+    in a many-file source runs one task instead of one per split, most
+    of them empty. ``coalesce`` never raises the partition count, so a
+    backfill keeps the scan's parallelism.
     """
     source = spark.read.schema(SOURCE_TABLE).parquet(source_path)
-    if source.filter(F.col("processed") == 0).isEmpty():
+    pending = source.filter(F.col("processed") == 0)
+    n_pending = pending.count()
+    if n_pending == 0:
         return 0  # S8 empty-input short-circuit
-    results = score_unprocessed(source).persist()
+    batch = int(spark.conf.get("spark.sql.execution.arrow.maxRecordsPerBatch"))
+    if batch > 0:  # <= 0 means unbounded batches: keep the scan's splits
+        pending = pending.coalesce(-(-n_pending // batch))
+    results = score_unprocessed(pending).persist()
     n_new = merge_results(spark, results, results_path)
     mark_processed(spark, source_path, results.select("record_id"))
     results.unpersist()

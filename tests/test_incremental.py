@@ -8,6 +8,8 @@ semantics absorb exactly that failure.
 
 from __future__ import annotations
 
+import os
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -91,8 +93,6 @@ def test_concurrent_writer_raises_and_lock_released(spark, source_df, tmp_path):
     the mkdir lock, a second overwrite of the same path must raise
     ConcurrentWriterError (not interleave renames) — and a failed writer
     must release the lock so later writers proceed."""
-    import os
-
     src = str(tmp_path / "src")
     lock = f"{src}__writelock"
     os.mkdir(lock)  # first writer holds the swap lock
@@ -107,6 +107,138 @@ def test_concurrent_writer_raises_and_lock_released(spark, source_df, tmp_path):
     incremental.init_source(spark, source_df, src)
     assert spark.read.parquet(src).count() == 4
     assert not os.path.exists(lock)  # happy path releases the lock too
+
+
+def _results(spark, rows):
+    return spark.createDataFrame(
+        rows, "record_id string, sentiment string, confidence double"
+    )
+
+
+def _stages(tmp_path):
+    return [p for p in os.listdir(tmp_path) if "__stage_" in p]
+
+
+def test_merge_of_existing_ids_is_noop_and_adds_no_files(spark, tmp_path):
+    res = str(tmp_path / "res")
+    batch = _results(spark, [("1", "positive", 1.0), ("2", "negative", 0.0)])
+    assert incremental.merge_results(spark, batch, res) == 2
+    before = sorted(os.listdir(res))
+    assert incremental.merge_results(spark, batch.limit(1), res) == 0
+    assert sorted(os.listdir(res)) == before
+    assert _stages(tmp_path) == []
+
+
+def test_merge_returns_rows_landed(spark, tmp_path):
+    res = str(tmp_path / "res")
+    incremental.merge_results(
+        spark, _results(spark, [("1", "positive", 1.0), ("2", "mixed", 0.5)]), res
+    )
+    batch = _results(
+        spark,
+        [("2", "mixed", 0.5), ("3", "neutral", 0.5), ("4", "negative", 0.0)],
+    )
+    n = incremental.merge_results(spark, batch, res)
+    assert n == spark.read.parquet(res).count() - 2 == 2
+    assert _counts(spark, res) == (4, 4)
+
+
+def test_merge_rerun_after_partial_move_converges(spark, tmp_path, monkeypatch):
+    """A crash while the staged part- files move into the results table:
+    some rows landed, the rest went with the discarded stage. The same
+    merge re-run lands exactly the missing rows."""
+    res = str(tmp_path / "res")
+    rows = [(str(i), "neutral", 0.5) for i in range(8)]
+    batch = _results(spark, rows).repartition(2)  # two part- files
+    real_replace = os.replace
+    moved = []
+
+    def crash_after_first(src, dst):
+        if moved:
+            raise OSError("crash mid-move")
+        moved.append(dst)
+        real_replace(src, dst)
+
+    with monkeypatch.context() as m:
+        m.setattr(os, "replace", crash_after_first)
+        with pytest.raises(OSError, match="crash mid-move"):
+            incremental.merge_results(spark, batch, res)
+    assert _stages(tmp_path) == []
+    landed = spark.read.parquet(res).count()
+    assert 0 < landed < len(rows)
+
+    assert incremental.merge_results(spark, batch, res) == len(rows) - landed
+    assert _counts(spark, res) == (len(rows), len(rows))
+
+
+def test_failed_write_leaves_no_stage_and_releases_lock(spark, source_df, tmp_path):
+    src, res = str(tmp_path / "src"), str(tmp_path / "res")
+    incremental.init_source(spark, source_df, src)
+    boom = F.when(F.col("id") == 3, F.raise_error(F.lit("boom")))
+    with pytest.raises(Exception, match="boom"):
+        incremental.init_source(
+            spark,
+            source_df.withColumn("text_column", boom.otherwise(F.col("text_column"))),
+            src,
+        )
+    scored = incremental.score_unprocessed(source_df)
+    with pytest.raises(Exception, match="boom"):
+        incremental.merge_results(
+            spark,
+            scored.withColumn(
+                "sentiment",
+                F.when(F.col("record_id") == "3", F.raise_error(F.lit("boom")))
+                .otherwise(F.col("sentiment")),
+            ),
+            res,
+        )
+    assert _stages(tmp_path) == []
+    assert not os.path.exists(f"{src}__writelock")
+    assert not os.path.exists(res)
+    assert spark.read.parquet(src).count() == 4  # the old table is intact
+
+
+def _multi_file_source(spark, path, n_files, pending_per_file):
+    """A SourceTable landed as ``n_files`` appends, each file holding one
+    processed row and ``pending_per_file`` unprocessed ones."""
+    for f in range(n_files):
+        rows = [(f * 100, "already done", 1)] + [
+            (f * 100 + i + 1, "nice clean room", 0) for i in range(pending_per_file)
+        ]
+        spark.createDataFrame(
+            rows, "id long, text_column string, processed int"
+        ).coalesce(1).write.mode("append").parquet(path)
+    n_scan = spark.read.parquet(path).rdd.getNumPartitions()
+    assert n_scan > 1  # small files the reader does not pack together
+    return n_scan
+
+
+def _part_files(path):
+    return [f for f in os.listdir(path) if f.startswith("part-")]
+
+
+def test_small_delta_is_scored_in_one_partition(spark, tmp_path):
+    """A fresh results table gets one part- file per scoring partition."""
+    src, res = str(tmp_path / "src"), str(tmp_path / "res")
+    _multi_file_source(spark, src, n_files=4, pending_per_file=1)
+    assert incremental.run_increment(spark, src, res) == 4
+    assert len(_part_files(res)) == 1
+
+
+def test_large_delta_keeps_scan_partitions(spark, tmp_path):
+    """A delta of many Arrow batches (a backfill, emulated with tiny
+    batches) keeps the scan's parallelism: coalesce never adds
+    partitions."""
+    src, res = str(tmp_path / "src"), str(tmp_path / "res")
+    n_scan = _multi_file_source(spark, src, n_files=4, pending_per_file=5)
+    conf = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    old = spark.conf.get(conf)
+    spark.conf.set(conf, "2")
+    try:
+        assert incremental.run_increment(spark, src, res) == 20
+    finally:
+        spark.conf.set(conf, old)
+    assert len(_part_files(res)) == n_scan
 
 
 def test_scd2_merge_successive_batches(spark):

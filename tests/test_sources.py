@@ -2,6 +2,7 @@
 
 from __future__ import annotations
 
+import hashlib
 import os
 
 from pyspark.sql import functions as F
@@ -205,6 +206,62 @@ def test_silver_types_and_null_convention(spark):
     assert r1.hotelier_response_ts is not None
     assert r3.hotelier_response_ts is None
     assert r3.stayed_room_info is None and r3.stay_nights is None
+
+
+SILVER_COLUMNS = [
+    ("review_id", "bigint"),
+    ("review_hash", "string"),
+    ("hotel_id", "bigint"),
+    ("hotelier_name", "string"),
+    ("hotelier_response", "string"),
+    ("hotelier_response_date", "bigint"),
+    ("average_score", "double"),
+    ("title", "string"),
+    ("title_translated", "string"),
+    ("pros", "string"),
+    ("pros_translated", "string"),
+    ("cons", "string"),
+    ("cons_translated", "string"),
+    ("date", "string"),
+    ("travel_purpose", "string"),
+    ("languagecode", "string"),
+    ("countrycode", "string"),
+    ("helpful_vote_count", "int"),
+    ("anonymous", "string"),
+    ("is_trivial", "boolean"),
+    ("is_moderated", "boolean"),
+    ("is_incentivised", "boolean"),
+    ("reviewng", "boolean"),
+    ("author", "struct<type:string,age_group:string,countrycode:string,"
+     "type_string:string,city:string,name:string,helpful_vote_count:int,"
+     "user_id:bigint,nr_reviews:int>"),
+    ("stayed_room_info", "struct<room_id:bigint,room_name:string,"
+     "checkin:string,checkout:string,num_nights:int,photo:struct<ratio:double,"
+     "photo_id:bigint,url_original:string,url_square60:string,"
+     "url_max300:string,url_640x200:string>>"),
+    ("tags", "array<string>"),
+    ("user_new_badges", "array<string>"),
+    ("reviewer_photos", "array<string>"),
+    ("review_ts", "timestamp"),
+    ("hotelier_response_ts", "timestamp"),
+    ("checkin", "date"),
+    ("checkout", "date"),
+    ("stay_nights", "int"),
+]
+
+
+def test_silver_pinned_on_golden_fixture(spark):
+    """Columns, their order and types, and an order-insensitive hash of
+    every value (rendered by Spark in the session time zone)."""
+    silver = json_ingest.silver_reviews(json_ingest.read_bronze(spark, FIXTURE))
+    assert [
+        (f.name, f.dataType.simpleString()) for f in silver.schema.fields
+    ] == SILVER_COLUMNS
+    rows = sorted(r[0] for r in silver.select(F.to_json(F.struct("*"))).collect())
+    assert len(rows) == 3
+    assert hashlib.sha256("\n".join(rows).encode()).hexdigest() == (
+        "ad1aa0d150e02ca1e4a1746e6c02d666841d537eac401221482eb325e82efb3a"
+    )
 
 
 def test_corpus_flatten_skips_nulls(spark):
