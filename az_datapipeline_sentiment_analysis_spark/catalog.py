@@ -1,13 +1,15 @@
-"""Testdata catalog: explicit-schema parquet scans.
+"""Testdata catalog: parquet scans, each schema read from the file.
 
 Tables are the driver-materialized synthetic star schema (TESTDATA.md):
 ``region nation customer supplier part orders lineitem events documents
 embeddings`` — one parquet file per table under an ``sf`` directory.
 
-Reads are plain ``spark.read.parquet`` so Catalyst keeps predicate
-pushdown / column pruning / partition pruning; we never cache here (the
-caller decides), and we never infer schemas from JSON in production
-paths (see schemas.py for the declared StructTypes).
+Reads are plain ``spark.read.parquet`` without a declared schema, so
+each call resolves the schema from the parquet footer (one Spark job
+per call), and Catalyst keeps predicate pushdown / column pruning /
+partition pruning. We never cache here (the caller decides). JSON, unlike parquet, is never read
+with an inferred schema in production paths (see schemas.py for the
+declared StructTypes of the reference payload).
 """
 
 from __future__ import annotations

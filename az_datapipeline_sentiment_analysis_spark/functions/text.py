@@ -193,27 +193,6 @@ def alpha_ratio_expr(col: str = "text") -> Column:
     )
 
 
-def stopword_ratio_expr(col: str = "text") -> Column:
-    hits = _lexicon_count_expr(col, STOPWORDS_EN)
-    toks = F.expr(f"size(regexp_extract_all(lower({col}), '{TOKEN_RE}', 0))")
-    return F.round(
-        F.when(toks == 0, F.lit(0.0)).otherwise(hits.cast("double") / toks), 6
-    )
-
-
-def quality_score_expr(col: str = "text") -> Column:
-    """Composite quality score in [0,1]: alpha-ratio weighted with a
-    length saturation term (min(len,400)/400) minus stopword excess."""
-    n = F.length(F.col(col))
-    length_term = F.least(n, F.lit(400)).cast("double") / F.lit(400.0)
-    return F.round(
-        0.5 * alpha_ratio_expr(col)
-        + 0.3 * length_term
-        + 0.2 * (1.0 - stopword_ratio_expr(col)),
-        6,
-    )
-
-
 # Language-ID stopword lexicons (checked by hits with fixed priority).
 LANG_LEXICONS = {
     "en": ("the", "and", "of", "to", "a"),
@@ -224,16 +203,10 @@ LANG_LEXICONS = {
 _CJK_RANGE = f"[{chr(0x4E00)}-{chr(0x9FFF)}]"  # literal chars: valid in Java re + RE2
 
 
-def lang_id_expr(col: str = "text") -> Column:
-    """Heuristic language ID: CJK chars -> zh, else argmax stopword hits
-    with fixed priority en > es > de > fr, else 'und'."""
-    hits = {k: _lexicon_count_expr(col, v) for k, v in LANG_LEXICONS.items()}
-    return _lang_id_from_hits(col, hits)
-
-
 def lang_id_on_tokens(text_col: str, toks_col: str) -> Column:
-    """lang_id_expr over a pre-tokenized array column (one regex pass
-    instead of four; the CJK probe still reads the raw text)."""
+    """Heuristic language ID over a pre-tokenized array column: CJK
+    chars -> zh, else argmax stopword hits with fixed priority
+    en > es > de > fr, else 'und' (the CJK probe reads the raw text)."""
     hits = {
         k: lexicon_count_on_tokens(toks_col, v)
         for k, v in LANG_LEXICONS.items()

@@ -18,6 +18,7 @@ Cross-engine determinism rules used throughout:
 
 from __future__ import annotations
 
+import os
 from collections.abc import Callable
 from contextlib import contextmanager as _contextmanager
 from typing import NamedTuple
@@ -35,8 +36,6 @@ from ..functions.text import (
     STOPWORDS_EN,
     alpha_ratio_expr,
     fingerprint_expr,
-    lang_id_expr,
-    quality_score_expr,
     sentiment_components_expr,
     sentiment_confidence_expr,
     sentiment_label_expr,
@@ -44,7 +43,6 @@ from ..functions.text import (
     lang_id_on_tokens,
     lexicon_count_on_tokens,
     sentiment_components_on_tokens,
-    stopword_ratio_expr,
     token_count_expr,
     tokens_expr,
     _CJK_RANGE,
@@ -2151,7 +2149,11 @@ def map_funcs(spark, sf):
     )
 
 
-GOLDEN_PAYLOAD = "/root/repo/tests/fixtures/reviews_payload.json"
+# the checkout's test fixtures, read by both the Spark entry and its oracle
+_FIXTURES = os.path.abspath(
+    os.path.join(os.path.dirname(__file__), "..", "..", "tests", "fixtures")
+)
+GOLDEN_PAYLOAD = os.path.join(_FIXTURES, "reviews_payload.json")
 
 
 @_q(
@@ -2186,7 +2188,7 @@ def scan_json(spark, sf):
     )
 
 
-CORRUPT_PAYLOAD = "/root/repo/tests/fixtures/corrupt_records.jsonl"
+CORRUPT_PAYLOAD = os.path.join(_FIXTURES, "corrupt_records.jsonl")
 
 
 @_q(

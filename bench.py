@@ -23,79 +23,23 @@ import time
 from az_datapipeline_sentiment_analysis_spark.plans.queries import REGISTRY
 from az_datapipeline_sentiment_analysis_spark.session import get_spark
 
+REPO = os.path.dirname(os.path.abspath(__file__))
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 # 10x key-shifted replication of SF_DIR (see benchdata.py), to surface
 # shuffle/skew costs the in-cache base scale hides. Skip with
 # SPARK_GRAFT_SKIP_SCALE=1.
 SCALE_FACTOR = int(os.environ.get("SPARK_GRAFT_SCALE_FACTOR", "10"))
-SCALE_DIR = os.environ.get("SPARK_GRAFT_SCALE_DIR", "/root/repo/.bench_scale")
+SCALE_DIR = os.environ.get(
+    "SPARK_GRAFT_SCALE_DIR", os.path.join(REPO, ".bench_scale")
+)
 
-# heavier subset re-run at the replicated scale (single shot each).
-# Timing-noise note (round 5): the r4 10x outliers q5 (3.87s) and q8
-# (5.43s) were re-measured in ISOLATION (3 runs, nothing co-resident,
-# warm page cache) at best-of-3 q5=1.18s / q8=1.88s — back at round-3
-# levels, so the r4 jump was co-scheduling noise from the widened
-# suite, not a plan regression (git confirmed no TPC-H code change).
-# Single-shot numbers for broadcast-join queries on a 32-thread box
-# carry up to ~3x run-to-run spread; compare the frozen subtotals
-# across rounds, not individual scale queries.
-# Round-6 isolation re-measure of the r5 drift (VERDICT r5 #1): the
-# frozen core-25 ran 14.39s with the scale pass disabled (r4: 16.56s,
-# r5 co-resident: 19.59s) and simhash_neardup at 10x ran best-of-3
-# 7.24s in a session running NOTHING else (r4: 8.13s, r5 co-resident:
-# 13.09s; dedup.py diff r4->r5 was an 8-line NULL coalesce with no
-# plan change). Both r5 regressions were session co-residency — the
-# 6 queries added to the benched set aging the shared JVM heap — not
-# plan deltas. Mitigation below: a System.gc() between queries so
-# accumulated garbage from earlier queries is not collected inside a
-# later query's timed window.
-# Round-7 resolution of the two r6 watch items (VERDICT r6 #4), each
-# re-measured in ISOLATION (3 runs, nothing co-resident):
-# * rolling_wau 10x best-of-3 1.55s — the r6 2.18s was noise; DISMISSED.
-# * simhash_neardup base best-of-3 4.65s — REAL, and bisected by A/B
-#   to the r6 persist->eager-localCheckpoint hygiene change in
-#   operators/dedup.py (persist() form: 2.46s). Fixed by
-#   generation-tracked persist (_persist_generation): persist speed,
-#   pinning bounded to one invocation's blocks per operator —
-#   base back to 2.47s.
-# Per-query noise band on this box (repeated observation r4-r7): the
-# FIRST run of any heavy query in a session can read 2-5x its warm
-# steady state (page cache + JIT + AQE stats); single-shot numbers for
-# broadcast/join-heavy queries carry up to ~3x spread. Only best-of-n
-# in one session, alternated A/B ordering, or frozen-subtotal deltas
-# are comparable across rounds.
-# Round-8 isolation re-measure of the two r7 outliers (VERDICT r7 #1;
-# fresh session per query, best-of-3, nothing co-resident):
-# * dedup_fingerprint 10x best-of-3 0.67s — r6 was 0.66s, the r7
-#   co-resident 1.59s (2.4x) was session noise; DISMISSED.
-# * quantile_bucketing sf0.1 best-of-3 2.33s (first run 6.65s!) — the
-#   r7 co-resident 3.69s collapses back toward r6's 1.64s, and the
-#   in-band controls moved identically in isolation (sessionize_events
-#   1.33s vs r6 1.08s, bootstrap_ci 1.54s vs r6 0.94s): a uniform
-#   ~1.3-1.6x environment shift across unrelated plans, not a plan
-#   regression (git: neither plan changed in r7).
-# The band below automates this triage: every bench run compares its
-# per-query numbers against the previous round's committed local
-# payload and reports entries above NOISE_BAND_X as band_outliers in
-# the payload, so environment drift (uniform shift, few/no outliers)
-# separates from plan regressions (single-entry spikes) without a
-# by-hand diff.
-# Round-9 resolution (VERDICT r8 #4, the ratio method's first use):
-# the r9 run showed 14 ABSOLUTE band outliers vs the r8 payload —
-# but the median absolute shift was 1.59x (host drift; q1 itself
-# 2.16x) and the RATIO-of-ratios (each query over its session's own
-# q1 probe, r8's q1 retrofitted as its probe) had median 1.03 with
-# only ks_drift (3.24) and dedup_fingerprint (2.61) above band.
-# Both re-measured best-of-3 in isolation: ks_drift/q1 = 0.48 vs
-# r8's 0.48, dedup_fingerprint/q1 = 0.39 vs r8's 0.39 — EXACT ratio
-# agreement, both DISMISSED as in-session jitter on sub-2s queries.
-# Zero plan regressions; from r10 on the ratio_band_outliers field
-# computes this automatically (both payloads now carry ratios).
-NOISE_BAND_X = 2.5  # co-resident best-of-2 spread vs a prior round:
-#   uniform co-residency drift measured 1.4-1.7x (r5, r7), first-run/
-#   join-heavy spread up to ~3x single-shot but <=2x for best-of-2;
-#   past REAL regressions exceeded 2x of the isolated reference
-#   (simhash r6 watch item). 2.5x splits those populations.
+# Per-query entries above NOISE_BAND_X times the previous round's
+# committed local payload are reported as band outliers, so a uniform
+# host shift (few or no outliers) separates from a plan regression (a
+# single-entry spike). Uniform co-residency drift measured 1.4-1.7x and
+# best-of-2 spread stays under 2x, while past real regressions exceeded
+# 2x of their isolated reference; 2.5x splits those populations.
+NOISE_BAND_X = 2.5
 
 
 def _previous_local_payload(round_no: int | None) -> dict:
@@ -104,14 +48,14 @@ def _previous_local_payload(round_no: int | None) -> dict:
     import re
 
     best_n, best = -1, {}
-    for f in os.listdir("/root/repo"):
+    for f in os.listdir(REPO):
         m = re.match(r"BENCH_local_r(\d+)\.json$", f)
         if not m:
             continue
         n = int(m.group(1))
         if (round_no is None or n < round_no) and n > best_n:
             try:
-                with open(f"/root/repo/{f}") as fh:
+                with open(os.path.join(REPO, f)) as fh:
                     best_n, best = n, json.load(fh)
             except Exception:
                 continue
@@ -149,19 +93,64 @@ def _ratios(
     return {n: round(t / probe_s, 3) for n, t in timings.items()}
 
 
-def _probe(spark, sf_dir: str, runs: int = 3) -> float:
-    """The pinned reference probe: q1_pricing_summary best-of-n on
-    ``sf_dir``, measured with the same quiesce discipline as the
-    suite. q1 is scan + columnar hash-agg — the cost class host
-    contention scales most uniformly."""
-    fn = REGISTRY["q1_pricing_summary"].fn
-    best = float("inf")
+def _quiesce(spark) -> None:
+    """Drop cached frames and collect accumulated JVM garbage BEFORE a
+    query's timed window. In a 40+-query session, garbage produced by
+    earlier queries otherwise gets collected inside later queries'
+    timings — the uniform upward drift the round-5 bench measured
+    (core-25 19.6s co-resident vs 14.4s isolated, identical code)."""
+    spark.catalog.clearCache()
+    try:
+        spark._jvm.System.gc()
+    except Exception:
+        pass  # never let the hygiene call break the measurement
+
+
+def _best_of(spark, name: str, sf_dir: str, runs: int) -> tuple[float, int]:
+    """Best wall seconds of ``runs`` collects of registry entry ``name``
+    on ``sf_dir``, and the rows the last run returned. Each run is
+    quiesced first and builds the query anew, so a rerun measures work,
+    not a cache hit; ``collect()`` materializes every operator. The
+    first run of a query shape pays one-time codegen and cold page-cache
+    reads (a cost a warm cluster pays once), so best-of-n measures the
+    steady state."""
+    fn = REGISTRY[name].fn
+    best, rows = float("inf"), 0
     for _ in range(runs):
         _quiesce(spark)
         t0 = time.perf_counter()
-        fn(spark, sf_dir).collect()
+        rows = len(fn(spark, sf_dir).collect())
         best = min(best, time.perf_counter() - t0)
-    return round(best, 4)
+    return best, rows
+
+
+def _probe(spark, sf_dir: str) -> float:
+    """The pinned reference probe: q1_pricing_summary best-of-3 on
+    ``sf_dir``. q1 is scan + columnar hash-agg — the cost class host
+    contention scales most uniformly."""
+    return round(_best_of(spark, "q1_pricing_summary", sf_dir, 3)[0], 4)
+
+
+def _time_suite(
+    spark, names: list[str], sf_dir: str, tag: str
+) -> tuple[dict[str, float], dict[str, str]]:
+    """Best-of-2 seconds per entry, and the errors of entries that
+    failed; one bad query must not zero the bench. Progress lines start
+    with ``tag``."""
+    timings: dict[str, float] = {}
+    errors: dict[str, str] = {}
+    for name in names:
+        try:
+            best, n = _best_of(spark, name, sf_dir, 2)
+        except Exception as e:
+            errors[name] = f"{type(e).__name__}: {e}"[:300]
+            print(f"{tag}{name}: ERROR {errors[name]}", flush=True)
+            continue
+        timings[name] = round(best, 3)
+        print(f"{tag}{name}: {timings[name]:.3f}s ({n} rows)", flush=True)
+    return timings, errors
+
+
 SCALE_HEADLINE = [
     "q1_pricing_summary",
     "q5_local_supplier",
@@ -491,19 +480,6 @@ def warmup(spark) -> None:
     ).collect()
 
 
-def _quiesce(spark) -> None:
-    """Drop cached frames and collect accumulated JVM garbage BEFORE a
-    query's timed window. In a 40+-query session, garbage produced by
-    earlier queries otherwise gets collected inside later queries'
-    timings — the uniform upward drift the round-5 bench measured
-    (core-25 19.6s co-resident vs 14.4s isolated, identical code)."""
-    spark.catalog.clearCache()
-    try:
-        spark._jvm.System.gc()
-    except Exception:
-        pass  # never let the hygiene call break the measurement
-
-
 def main() -> None:
     spark = get_spark("bench")
     warmup(spark)
@@ -516,29 +492,7 @@ def main() -> None:
         probe_s = 0.0
         print(f"# ref probe FAILED (ratios disabled): {e}", flush=True)
     print(f"# ref probe (q1 best-of-3): {probe_s:.4f}s", flush=True)
-    timings: dict[str, float] = {}
-    errors: dict[str, str] = {}
-    for name in HEADLINE:
-        fn = REGISTRY[name].fn
-        # best of 2: the first run of a query shape pays one-time
-        # whole-stage-codegen compilation (amortized to zero on a real
-        # cluster where a query runs over thousands of partitions);
-        # collect() forces full materialization of every operator
-        best, n = float("inf"), 0
-        try:
-            for _ in range(2):
-                # drop any persisted intermediates (e.g. minhash
-                # signatures) so rerun measures work, not a cache hit
-                _quiesce(spark)
-                t0 = time.perf_counter()
-                n = len(fn(spark, SF_DIR).collect())
-                best = min(best, time.perf_counter() - t0)
-        except Exception as e:  # one bad query must not zero the bench
-            errors[name] = f"{type(e).__name__}: {e}"[:300]
-            print(f"# {name}: ERROR {errors[name]}", flush=True)
-            continue
-        timings[name] = round(best, 3)
-        print(f"# {name}: {timings[name]:.3f}s ({n} rows)", flush=True)
+    timings, errors = _time_suite(spark, HEADLINE, SF_DIR, "# ")
 
     sf = SF_DIR.rstrip("/").rsplit("sf", 1)[-1]
     try:
@@ -609,33 +563,9 @@ def main() -> None:
                 f" {scale_probe_s:.4f}s",
                 flush=True,
             )
-            scale_timings: dict[str, float] = {}
-            scale_errors: dict[str, str] = {}
-            for name in SCALE_HEADLINE:
-                # best-of-2, same methodology as the base suite: first
-                # run pays cold page-cache reads + codegen (a cost a
-                # warm cluster pays once), second measures steady state
-                best, n = float("inf"), 0
-                try:
-                    for _ in range(2):
-                        _quiesce(spark)
-                        t0 = time.perf_counter()
-                        n = len(REGISTRY[name].fn(spark, scale_dir).collect())
-                        best = min(best, time.perf_counter() - t0)
-                except Exception as e:
-                    scale_errors[name] = f"{type(e).__name__}: {e}"[:300]
-                    print(
-                        f"# [x{SCALE_FACTOR}] {name}: ERROR"
-                        f" {scale_errors[name]}",
-                        flush=True,
-                    )
-                    continue
-                scale_timings[name] = round(best, 3)
-                print(
-                    f"# [x{SCALE_FACTOR}] {name}: {scale_timings[name]:.3f}s"
-                    f" ({n} rows)",
-                    flush=True,
-                )
+            scale_timings, scale_errors = _time_suite(
+                spark, SCALE_HEADLINE, scale_dir, f"# [x{SCALE_FACTOR}] "
+            )
             payload.update(
                 {
                     "scale_factor_x": SCALE_FACTOR,
@@ -683,7 +613,7 @@ def main() -> None:
         else:
             rounds = [
                 int(m.group(1))
-                for f in os.listdir("/root/repo")
+                for f in os.listdir(REPO)
                 for m in [_re.match(r"BENCH_r(\d+)\.json$", f)]
                 if m
             ]
@@ -755,7 +685,7 @@ def main() -> None:
     else:
         local_path = f"BENCH_local{suffix}.auto.json"
     try:
-        with open(f"/root/repo/{local_path}", "w") as fh:
+        with open(os.path.join(REPO, local_path), "w") as fh:
             json.dump(payload, fh)
     except Exception as e:
         print(f"# local payload write failed: {e}", flush=True)

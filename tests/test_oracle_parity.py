@@ -1,25 +1,24 @@
 """Local mirror of the driver's DuckDB-oracle correctness gate.
 
 For every registry entry with an oracle, run the PySpark query and the
-DuckDB SQL on the same parquet tables and compare row count, column
-names, and (order-insensitively) every value. Catches cross-engine
-drift (float dust, type width, null conventions) before the driver does.
+DuckDB SQL on the same parquet tables and compare them with the
+strict comparator of ``tools/driver_gate_mirror.py``: column
+names, row count, dtype kinds and the repr of every cell, order-
+insensitively. Catches cross-engine drift (float dust, an int rendered
+as a float, a signed zero, null conventions) before the external gate
+does.
 """
 
 from __future__ import annotations
 
-import math
+import os
 
-import duckdb
 import pandas as pd
 import pytest
 
-from az_datapipeline_sentiment_analysis_spark.catalog import TABLES
 from az_datapipeline_sentiment_analysis_spark.plans.queries import REGISTRY
-
-import os
-
 from conftest import SF_SMOKE
+from tools.driver_gate_mirror import compare_frames, oracle_connection
 
 SF_SMOKE = os.environ.get("PARITY_SF_DIR", SF_SMOKE)
 
@@ -42,74 +41,20 @@ EMPTY_OK = {
 }
 
 
-def _duck(sf_dir: str) -> duckdb.DuckDBPyConnection:
-    con = duckdb.connect()
-    for t in TABLES:
-        con.execute(
-            f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'"
-        )
-    return con
-
-
-def _normalize(df: pd.DataFrame) -> pd.DataFrame:
-    df = df[sorted(df.columns)].copy()
-    for c in df.columns:
-        s = df[c]
-        if pd.api.types.is_datetime64_any_dtype(s):
-            df[c] = pd.to_datetime(s).dt.tz_localize(None)
-        elif pd.api.types.is_float_dtype(s):
-            df[c] = s.astype(float)
-        elif pd.api.types.is_integer_dtype(s):
-            df[c] = s.astype("Int64")
-        elif s.dtype == object:
-            # array columns arrive as numpy arrays (DuckDB) or lists
-            # (Spark); tuples make them sortable and comparable
-            df[c] = s.map(
-                lambda v: tuple(v) if isinstance(v, (list, tuple)) or (
-                    hasattr(v, "__len__") and hasattr(v, "dtype")
-                ) else v
-            )
-    return df.sort_values(by=list(df.columns), ignore_index=True, na_position="last")
-
-
-def _values_equal(a, b) -> bool:
-    if a is None or b is None or (isinstance(a, float) and math.isnan(a)):
-        an = a is None or (isinstance(a, float) and math.isnan(a))
-        bn = b is None or (isinstance(b, float) and math.isnan(b))
-        return an == bn
-    if isinstance(a, float) and isinstance(b, float):
-        return a == b or math.isclose(a, b, rel_tol=0, abs_tol=0)
-    return a == b
-
-
 @pytest.mark.parametrize("name", ORACLE_NAMES)
 def test_oracle_parity(spark, name):
     q = REGISTRY[name]
     sdf = q.fn(spark, SF_SMOKE).toPandas()
-    con = _duck(SF_SMOKE)
-    odf = con.execute(q.sql).fetchdf()
-    con.close()
+    with oracle_connection(SF_SMOKE) as con:
+        odf = con.execute(q.sql).fetchdf()
 
-    assert sorted(sdf.columns) == sorted(odf.columns), (
-        f"{name}: column mismatch spark={sorted(sdf.columns)} oracle={sorted(odf.columns)}"
-    )
-    assert len(sdf) == len(odf), f"{name}: rows spark={len(sdf)} oracle={len(odf)}"
+    status, detail = compare_frames(sdf, odf)
+    assert status == "OK", f"{name}: {status} {detail}"
     if name not in EMPTY_OK:
         assert len(odf) > 0, (
             f"{name}: oracle returned 0 rows — parity is trivially true; "
             "adjust predicates to the synthetic data domain or add to EMPTY_OK"
         )
-    s, o = _normalize(sdf), _normalize(odf)
-    for col in s.columns:
-        sv, ov = s[col].tolist(), o[col].tolist()
-        bad = [
-            (i, x, y)
-            for i, (x, y) in enumerate(zip(sv, ov))
-            if not _values_equal(
-                None if pd.isna(x) else x, None if pd.isna(y) else y
-            )
-        ]
-        assert not bad, f"{name}.{col}: first diffs {bad[:5]}"
 
 
 @pytest.mark.parametrize("name", ROWS_ONLY_NAMES)
@@ -126,9 +71,8 @@ def test_two_scale_dirs_in_one_session(spark):
     for q in ("q1_pricing_summary", "join_bucketed"):
         for sf_dir in ("/root/testdata/sf0.001", "/root/testdata/sf0.01"):
             got = len(REGISTRY[q].fn(spark, sf_dir).toPandas())
-            con = _duck(sf_dir)
-            want = len(con.execute(REGISTRY[q].sql).fetchdf())
-            con.close()
+            with oracle_connection(sf_dir) as con:
+                want = len(con.execute(REGISTRY[q].sql).fetchdf())
             assert got == want, (q, sf_dir, got, want)
 
 
@@ -136,43 +80,30 @@ def test_two_scale_dirs_in_one_session(spark):
 # Driver-gate mirror comparator: regression tests for the two round-4
 # escapes. An isclose-based comparator waved both of these through while
 # the driver's stringifying value hash failed them; the hardened
-# repr-level comparator must flag each shape forever.
+# repr-level comparator, which test_oracle_parity above also uses, must
+# flag each shape forever.
 # ---------------------------------------------------------------------
-
-def _mirror_compare():
-    import importlib
-    import sys
-
-    sys.path.insert(0, "/root/repo/tools")
-    try:
-        return importlib.import_module("driver_gate_mirror").compare_frames
-    finally:
-        sys.path.pop(0)
-
 
 def test_mirror_flags_hugeint_float_render():
     """cross_tab r4: DuckDB HUGEINT SUM fetches as float64; values are
     numerically identical to Spark's int64 but hash differently."""
-    compare = _mirror_compare()
     spark_df = pd.DataFrame({"k": ["a", "b"], "n": pd.array([5, 7], dtype="int64")})
     oracle_df = pd.DataFrame({"k": ["a", "b"], "n": pd.array([5.0, 7.0], dtype="float64")})
-    status, detail = compare(spark_df, oracle_df)
+    status, detail = compare_frames(spark_df, oracle_df)
     assert status == "DTYPE", (status, detail)
 
 
 def test_mirror_flags_signed_zero():
     """bigram_pmi r4: DuckDB ROUND emitted -0.0 where Spark emitted 0.0;
     == calls them equal, a stringified hash does not."""
-    compare = _mirror_compare()
     spark_df = pd.DataFrame({"k": ["a"], "v": [0.0]})
     oracle_df = pd.DataFrame({"k": ["a"], "v": [-0.0]})
-    status, detail = compare(spark_df, oracle_df)
+    status, detail = compare_frames(spark_df, oracle_df)
     assert status == "VALUES", (status, detail)
 
 
 def test_mirror_accepts_equal_frames():
-    compare = _mirror_compare()
     a = pd.DataFrame({"k": ["a", "b"], "v": [1.5, None], "n": [3, 4]})
     b = pd.DataFrame({"k": ["b", "a"], "v": [None, 1.5], "n": [4, 3]})
-    status, detail = compare(a, b)
+    status, detail = compare_frames(a, b)
     assert status == "OK", (status, detail)

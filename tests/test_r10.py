@@ -333,16 +333,12 @@ def test_cosine_oracles_zero_norm_guard_cross_engine(spark, tmp_path):
     a fixture with zero vectors on BOTH the query and corpus side
     must hash-match across engines instead of producing NaN/inf in
     DuckDB vs 0.0 in Spark."""
-    import sys
-
     import duckdb
-
-    sys.path.insert(0, "/root/repo/tools")
-    from driver_gate_mirror import compare_frames
 
     from az_datapipeline_sentiment_analysis_spark.plans.queries import (
         REGISTRY,
     )
+    from tools.driver_gate_mirror import compare_frames
 
     rows = [
         (i, [float((i * 7 + d) % 5 - 2) for d in range(64)], i % 3)

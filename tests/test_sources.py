@@ -264,6 +264,19 @@ def test_silver_pinned_on_golden_fixture(spark):
     )
 
 
+def test_registry_fixtures_are_this_checkouts():
+    """The JSON ingest entries and their oracles read the fixtures of the
+    checkout the package was imported from, so a second checkout never
+    reads another one's files."""
+    import az_datapipeline_sentiment_analysis_spark as pkg
+    from az_datapipeline_sentiment_analysis_spark.plans import queries
+
+    checkout = os.path.dirname(os.path.dirname(os.path.abspath(pkg.__file__)))
+    for path in (queries.GOLDEN_PAYLOAD, queries.CORRUPT_PAYLOAD):
+        assert os.path.commonpath([checkout, path]) == checkout, path
+        assert os.path.isfile(path), path
+
+
 def test_corpus_flatten_skips_nulls(spark):
     silver = json_ingest.silver_reviews(json_ingest.read_bronze(spark, FIXTURE))
     corpus = {r.id: r for r in json_ingest.review_text_corpus(silver).collect()}

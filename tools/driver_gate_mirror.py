@@ -10,36 +10,41 @@ render (``5.0`` float64 vs ``5`` int64 — DuckDB HUGEINT sums come back
 float64 through ``fetchdf``) and ``bigram_pmi`` on IEEE signed zero
 (``-0.0`` vs ``0.0``), both of which an earlier isclose-based version of
 this tool waved through. The comparator below is therefore repr-level:
-canonical string form per cell, no numeric tolerance rescue, plus a
-canonicalized-dtype equality check between the two frames. If values
-differ below the driver's float rounding they still compare equal —
-that rounding (and only that rounding) is applied first, like the
-driver does.
+canonical string form per cell, no numeric tolerance and no rounding,
+plus a canonicalized-dtype equality check between the two frames.
+Exact equality implies equality after the gate's float rounding, so
+this is never weaker than that gate. ``compare_frames`` is also
+the comparator of tier-1's ``tests/test_oracle_parity.py``.
 
-Usage: python tools/driver_gate_mirror.py [N=50 | name1,name2,...] [SF_DIR]
-Prints one line per query: OK / ROWS / SCHEMA / DTYPE / VALUES / ERR.
+Usage (from the repo root):
+    python -m tools.driver_gate_mirror [N=50 | name1,name2,...] [SF_DIR]
+Prints one line per query: OK / ROWS / SCHEMA / DTYPE / VALUES / ERR,
+with the Spark (build + toPandas) and oracle seconds of each entry.
 """
 
 from __future__ import annotations
 
 import os
 import sys
+import time
 
 import duckdb
 import pandas as pd
 
-sys.path.insert(0, "/root/repo")
+from az_datapipeline_sentiment_analysis_spark.catalog import TABLES
 
-TABLES = [
-    "region", "nation", "customer", "supplier", "part",
-    "orders", "lineitem", "events", "documents", "embeddings",
-]
+
+def oracle_connection(sf_dir: str) -> duckdb.DuckDBPyConnection:
+    """DuckDB connection with one view per testdata table of ``sf_dir``."""
+    con = duckdb.connect()
+    for t in TABLES:
+        con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'")
+    return con
 
 
 def _canon(df: pd.DataFrame) -> pd.DataFrame:
-    """Driver-faithful canonicalization: sort columns by name, round
-    floats, then a plain multi-column sort_values — no list→tuple
-    rescue."""
+    """Gate-faithful canonicalization: sort columns by name, then a
+    plain multi-column sort_values — no list→tuple rescue."""
     df = df[sorted(df.columns)].copy()
     for c in df.columns:
         s = df[c]
@@ -54,8 +59,6 @@ def _canon(df: pd.DataFrame) -> pd.DataFrame:
             # was hash-green r4 with exactly this split), so a unit
             # difference is not a real DTYPE hazard
             df[c] = df[c].astype("datetime64[ns]")
-        elif pd.api.types.is_float_dtype(s):
-            df[c] = s.round(6)
     return df.sort_values(by=list(df.columns), ignore_index=True,
                           na_position="last")
 
@@ -127,8 +130,7 @@ def main() -> None:
     sf = sys.argv[2] if len(sys.argv) > 2 else "/root/testdata/sf0.01"
     # VANILLA session on purpose — the external driver does not apply
     # the engine's tuned session config, so neither does the mirror
-    # (200 shuffle partitions, default AQE). Set MIRROR_FAST=1 for the
-    # quicker 8-partition variant while iterating.
+    # (200 shuffle partitions, default AQE).
     b = SparkSession.builder.master("local[8]")
     # a FULL registry sweep at sf0.1 runs 350 queries in one session —
     # the default 1g driver heap eventually dies mid-sweep (round 9:
@@ -140,44 +142,50 @@ def main() -> None:
     b = b.config(
         "spark.driver.memory", os.environ.get("MIRROR_DRIVER_MEM", "8g")
     )
-    if os.environ.get("MIRROR_FAST"):
-        b = b.config("spark.sql.shuffle.partitions", "8")
     spark = b.getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
-    con = duckdb.connect()
-    for t in TABLES:
-        con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{sf}/{t}.parquet'")
+    con = oracle_connection(sf)
 
     qs, osql = mod.queries(), mod.oracle_sql()
     names = list(qs)[: int(arg)] if arg.isdigit() else arg.split(",")
     bad = 0
+    spark_total = oracle_total = 0.0
     for name in names:
         try:
             # drop persisted intermediates between queries: in a
             # 350-query sweep, accumulated cache blocks are pure heap
             # pressure (the driver never runs this many per session)
             spark.catalog.clearCache()
+            t0 = time.perf_counter()
             sdf = qs[name](spark, sf).toPandas()
         except Exception as exc:
             print(f"ERR    {name}: spark: {type(exc).__name__}: {exc}"[:300])
             bad += 1
             continue
+        spark_s = time.perf_counter() - t0
+        spark_total += spark_s
         if name not in osql:
-            print(f"ROWS-ONLY {name}: spark_rows={len(sdf)}")
+            print(f"ROWS-ONLY {name}: spark_rows={len(sdf)} "
+                  f"spark={spark_s:.2f}s")
             continue
+        t0 = time.perf_counter()
         try:
             odf = con.execute(osql[name]).fetchdf()
         except Exception as exc:
             print(f"ERR    {name}: oracle: {type(exc).__name__}: {exc}"[:300])
             bad += 1
             continue
+        oracle_s = time.perf_counter() - t0
+        oracle_total += oracle_s
+        timing = f"spark={spark_s:.2f}s oracle={oracle_s:.2f}s"
         status, detail = compare_frames(sdf, odf)
         if status == "OK":
-            print(f"OK     {name} ({detail})")
+            print(f"OK     {name} ({detail}) {timing}")
         else:
-            print(f"{status:<6} {name}: {detail}"[:300])
+            print(f"{status:<6} {name}: {timing} {detail}"[:300])
             bad += 1
-    print(f"\n{len(names) - bad}/{len(names)} clean")
+    print(f"\n{len(names) - bad}/{len(names)} clean "
+          f"(spark={spark_total:.1f}s oracle={oracle_total:.1f}s)")
     sys.exit(1 if bad else 0)
 
 
