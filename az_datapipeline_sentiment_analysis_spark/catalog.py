@@ -31,11 +31,6 @@ TABLES = (
     "embeddings",
 )
 
-# Dimension tables that are safely broadcastable at any realistic scale
-# (region=5, nation=25 rows at every SF; supplier/part grow slowly).
-BROADCAST_DIMS = frozenset({"region", "nation", "supplier"})
-
-
 def table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Scan one testdata table (columnar parquet scan, pushdown-capable).
 

@@ -5,8 +5,10 @@ Replaces the reference's external Azure AI Language call
 horizontally-scalable lexicon scorer. Two implementations with IDENTICAL
 semantics:
 
-* ``sentiment_expr`` — pure JVM expression (regexp + array lambdas),
-  stays inside WholeStageCodegen; the fast path.
+* ``sentiment_components_expr`` (or ``sentiment_components_on_tokens``
+  over a pre-tokenized column) feeding ``sentiment_label_expr`` and
+  ``sentiment_confidence_expr`` — pure JVM expressions (regexp + array
+  lambdas) that stay inside WholeStageCodegen;
 * ``sentiment_pandas_udf`` — Arrow-vectorized pandas UDF; models the
   reference's batched-remote-enrichment operator shape (S11): batches
   arrive as Arrow record batches instead of the reference's serial

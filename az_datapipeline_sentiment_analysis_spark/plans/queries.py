@@ -52,6 +52,7 @@ from ..operators import dedup as dd
 from ..operators import multimodal as mm
 from ..operators import similarity as sim
 from ..operators.asof import asof_join
+from ..streaming.incremental import score_unprocessed
 
 
 class Q(NamedTuple):
@@ -1410,17 +1411,7 @@ def pipeline_sentiment_batch(spark, sf):
         F.col("text").alias("text_column"),
         F.when(F.col("doc_id") % 3 == 0, 0).otherwise(1).alias("processed"),
     )
-    unprocessed = src.filter(F.col("processed") == 0).select(
-        F.col("id").cast("string").alias("id"),
-        F.lit("en").alias("language"),
-        F.col("text_column").alias("text"),
-    )
-    scored = unprocessed.withColumn("s", sentiment_pandas_udf(F.col("text")))
-    return scored.select(
-        F.col("id").alias("record_id"),
-        F.col("s.sentiment").alias("sentiment"),
-        F.round(F.col("s.confidenceScores.positive"), 6).alias("confidence"),
-    )
+    return score_unprocessed(src)
 
 
 _LANG_HIT = (

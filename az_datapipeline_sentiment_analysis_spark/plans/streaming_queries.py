@@ -7,9 +7,10 @@ sink, and returns the sink contents as a batch DataFrame — so the
 driver's DuckDB oracle can check STREAMING semantics, not just the
 batch twins:
 
-* ``stream_tumbling_agg`` — watermark-free tumbling agg in complete
-  mode: after the backlog drains, the result must equal the batch
-  group-by (the oracle);
+* ``stream_tumbling_agg`` — ``stream.tumbling_counts`` in complete
+  mode, which keeps every window whatever the watermark: after the
+  backlog drains, the result must equal the batch group-by (the
+  oracle);
 * ``stream_sliding_agg`` — same contract for overlapping windows;
 * ``stream_dedup`` — ``dropDuplicatesWithinWatermark`` over input
   containing every row TWICE (two identical file slices): the stream
@@ -93,15 +94,8 @@ def _drain(df: DataFrame, spark: SparkSession, *, mode: str) -> DataFrame:
 )
 def stream_tumbling_agg(spark, sf):
     src = stream.stream_events(spark, _staged_events(spark, sf, doubled=False))
-    agg = (
-        src.groupBy(F.window("ts", "1 hour").alias("w"), "event_type")
-        .agg(F.count("*").alias("n_events"), F.sum("value").alias("sv"))
-        .select(
-            F.col("w.start").alias("window_start"),
-            "event_type",
-            "n_events",
-            F.round("sv", 4).alias("sum_value"),
-        )
+    agg = stream.tumbling_counts(src).withColumn(
+        "sum_value", F.round("sum_value", 4)
     )
     return _drain(agg, spark, mode="complete")
 
@@ -186,11 +180,7 @@ def stream_dedup(spark, sf):
 )
 def stream_session_agg(spark, sf):
     src = stream.stream_events(spark, _staged_events(spark, sf, doubled=False))
-    agg = (
-        src.groupBy(F.session_window("ts", "5 minutes").alias("w"), "user_id")
-        .agg(F.count("*").alias("n_events"))
-        .select("user_id", F.col("w.start").alias("session_start"), "n_events")
-    )
+    agg = stream.session_counts(src).select("user_id", "session_start", "n_events")
     return _drain(agg, spark, mode="complete")
 
 
@@ -1062,9 +1052,7 @@ def stream_curation_pipeline(spark, sf):
         curation_stream_batch(b, bid, out_dir, idx_dir)
 
     with _few_partitions(spark):
-        q = stream.start_foreach_batch(
-            src, fn, checkpoint=f"{work}/ckpt", mode="update"
-        )
+        q = stream.start_foreach_batch(src, fn, checkpoint=f"{work}/ckpt")
         q.awaitTermination(300)
     return (
         spark.read.option("recursiveFileLookup", "true")

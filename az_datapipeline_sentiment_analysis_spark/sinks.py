@@ -1,8 +1,8 @@
-"""Sink helpers: append, console/log, and upsert entry points.
+"""Sink helpers: append, JSON-record, and upsert entry points.
 
 The reference's three write paths (SURVEY §2.1): S15 row-at-a-time
-INSERT -> set-at-a-time append; S4 json-to-log -> console sink /
-to_json projection; S16 UPDATE..IN(..) -> the idempotent merge in
+INSERT -> set-at-a-time append; S4 json-to-log -> a to_json
+projection; S16 UPDATE..IN(..) -> the idempotent merge in
 ``streaming.incremental``. Kept thin on purpose — the table layer
 (parquet here, Delta/Iceberg in deployment) owns transactionality.
 """
@@ -22,16 +22,3 @@ def to_json_rows(df: DataFrame) -> DataFrame:
     """S4's serialize-whole-record: one JSON string column per row."""
     return df.select(F.to_json(F.struct(*df.columns)).alias("json"))
 
-
-def log_stream(df: DataFrame, *, n_rows: int = 20):
-    """S4's log sink for a streaming frame: console sink, bounded rows.
-
-    Returns the started query handle (caller stops it).
-    """
-    return (
-        df.writeStream.format("console")
-        .option("numRows", n_rows)
-        .option("truncate", "true")
-        .trigger(availableNow=True)
-        .start()
-    )

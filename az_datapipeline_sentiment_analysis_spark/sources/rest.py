@@ -14,6 +14,16 @@ from the Spark-side plan; everything else is left for Spark to
 re-apply. ``numPages``/``pageSize`` options bound the scan (the
 reference reads exactly one page of 25, ``sample.json`` ``count: 25``).
 
+``spark.readStream.format("rest_reviews")`` reads the same pages: the
+offset is a page number, ``numPages`` bounds both readers (it is the
+stream's latest offset), and a micro-batch is one partition per page in
+``[start, end)``, read by the batch reader's task body. One start thus
+drains every page its checkpoint has not committed; a timer fire is a
+restart on the same checkpoint with a larger ``numPages``, and only the
+new pages arrive. Replay is page-stable: a replayed micro-batch
+re-fetches the same pages (a real endpoint must be page-stable too, or
+the consumer dedups by ``review_hash``).
+
 Networking is injected: the default ``fetch_page`` is a deterministic
 synthetic reviews-API generator (this container has no egress), and a
 real deployment passes an HTTP fetcher with the same signature. The
@@ -35,11 +45,11 @@ from dataclasses import dataclass
 from pyspark.sql.datasource import (
     DataSource,
     DataSourceReader,
+    DataSourceStreamReader,
     EqualTo,
     Filter,
     In,
     InputPartition,
-    SimpleDataSourceStreamReader,
 )
 from pyspark.sql import types as T
 
@@ -59,8 +69,6 @@ REST_REVIEW_SCHEMA = T.StructType(
         T.StructField("page_number", T.IntegerType()),
     ]
 )
-
-_PUSHABLE = ("hotel_id", "languagecode")
 
 _WORDS = (
     "fast", "slow", "good", "bad", "clean", "dirty", "quick", "late",
@@ -205,6 +213,42 @@ class PagePartition(InputPartition):
     params: tuple  # sorted (key, value) pairs; must be picklable+hashable
 
 
+def _page_partitions(
+    options: dict, pushed: dict, first: int, end: int
+) -> list[PagePartition]:
+    """One partition per page in ``[first, end)``, all sharing one set
+    of request params (the scan's options plus any pushed filters)."""
+    params = {
+        "hotel_id": options.get("hotel_id", "1676161"),
+        "page_size": options.get("pagesize", "25"),
+        **pushed,
+    }
+    frozen = tuple(sorted(params.items()))
+    return [PagePartition(page=p, params=frozen) for p in range(first, end)]
+
+
+def _page_rows(options: dict, partition: PagePartition):
+    """Fetch one page (with retry) and yield its reviews as rows of
+    ``REST_REVIEW_SCHEMA`` — the task body of both readers."""
+    params = dict(partition.params)
+    params["page_number"] = str(partition.page)
+    fetch = FETCHERS[options.get("fetcher", "synthetic")]
+    payload = json.loads(fetch_with_retry(fetch, params))
+    for r in payload.get("result", []):
+        yield (
+            r.get("review_id"),
+            r.get("hotel_id"),
+            r.get("review_hash"),
+            r.get("average_score"),
+            r.get("title"),
+            r.get("pros"),
+            r.get("cons"),
+            r.get("languagecode"),
+            r.get("date"),
+            partition.page,
+        )
+
+
 class RestReviewsReader(DataSourceReader):
     def __init__(self, schema: T.StructType, options: dict):
         self.schema = schema
@@ -232,46 +276,15 @@ class RestReviewsReader(DataSourceReader):
 
     def partitions(self):
         n_pages = int(self.options.get("numpages", 1))
-        params = {
-            "hotel_id": self.options.get("hotel_id", "1676161"),
-            "page_size": self.options.get("pagesize", "25"),
-            **self.pushed,
-        }
-        frozen = tuple(sorted(params.items()))
-        return [PagePartition(page=p, params=frozen) for p in range(n_pages)]
+        return _page_partitions(self.options, self.pushed, 0, n_pages)
 
     def read(self, partition: PagePartition):
-        params = dict(partition.params)
-        params["page_number"] = str(partition.page)
-        fetch = FETCHERS[self.options.get("fetcher", "synthetic")]
-        payload = json.loads(fetch_with_retry(fetch, params))
-        for r in payload.get("result", []):
-            yield (
-                r.get("review_id"),
-                r.get("hotel_id"),
-                r.get("review_hash"),
-                r.get("average_score"),
-                r.get("title"),
-                r.get("pros"),
-                r.get("cons"),
-                r.get("languagecode"),
-                r.get("date"),
-                partition.page,
-            )
+        return _page_rows(self.options, partition)
 
 
-class RestReviewsStreamReader(SimpleDataSourceStreamReader):
-    """Micro-batch page puller: the S1 fetch under the S2 cadence.
-
-    The offset is the next page number; each micro-batch reads
-    ``pagesPerBatch`` pages (one by default — the reference's one page
-    per timer fire). ``maxPages`` bounds the stream for tests/backfills;
-    past it, batches are empty. Replayed batches (``readBetweenOffsets``
-    after restart) re-fetch the same pages — the synthetic fetch is
-    deterministic, and a real endpoint must be page-stable for
-    exactly-once (otherwise dedup downstream by review_hash, see
-    ``streaming.stream.dedup_within_watermark``).
-    """
+class RestReviewsStreamReader(DataSourceStreamReader):
+    """Micro-batch page puller: the S1 fetch under the S2 cadence (the
+    offset contract is in the module docstring)."""
 
     def __init__(self, options: dict):
         self.options = options
@@ -279,42 +292,14 @@ class RestReviewsStreamReader(SimpleDataSourceStreamReader):
     def initialOffset(self) -> dict:  # noqa: N802 (Spark API)
         return {"page": 0}
 
-    def _rows(self, first_page: int, n_pages: int):
-        params = {
-            "hotel_id": self.options.get("hotel_id", "1676161"),
-            "page_size": self.options.get("pagesize", "25"),
-        }
-        fetch = FETCHERS[self.options.get("fetcher", "synthetic")]
-        out = []
-        for page in range(first_page, first_page + n_pages):
-            params["page_number"] = str(page)
-            payload = json.loads(fetch_with_retry(fetch, params))
-            for r in payload.get("result", []):
-                out.append(
-                    (
-                        r.get("review_id"),
-                        r.get("hotel_id"),
-                        r.get("review_hash"),
-                        r.get("average_score"),
-                        r.get("title"),
-                        r.get("pros"),
-                        r.get("cons"),
-                        r.get("languagecode"),
-                        r.get("date"),
-                        page,
-                    )
-                )
-        return out
+    def latestOffset(self) -> dict:  # noqa: N802 (Spark API)
+        return {"page": int(self.options.get("numpages", 1))}
 
-    def read(self, start: dict):
-        page = int(start["page"])
-        per_batch = int(self.options.get("pagesperbatch", 1))
-        max_pages = int(self.options.get("maxpages", 2**31 - 1))
-        n = max(0, min(per_batch, max_pages - page))
-        return iter(self._rows(page, n)), {"page": page + n}
+    def partitions(self, start: dict, end: dict) -> list[PagePartition]:
+        return _page_partitions(self.options, {}, start["page"], end["page"])
 
-    def readBetweenOffsets(self, start: dict, end: dict):  # noqa: N802
-        return iter(self._rows(int(start["page"]), int(end["page"]) - int(start["page"])))
+    def read(self, partition: PagePartition):
+        return _page_rows(self.options, partition)
 
 
 class RestReviewsDataSource(DataSource):
@@ -331,7 +316,7 @@ class RestReviewsDataSource(DataSource):
     def reader(self, schema: T.StructType) -> RestReviewsReader:
         return RestReviewsReader(schema, self.options)
 
-    def simpleStreamReader(  # noqa: N802 (Spark API)
+    def streamReader(  # noqa: N802 (Spark API)
         self, schema: T.StructType
     ) -> RestReviewsStreamReader:
         return RestReviewsStreamReader(self.options)

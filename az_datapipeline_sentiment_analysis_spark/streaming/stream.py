@@ -37,18 +37,15 @@ EVENTS_SCHEMA = T.StructType(
 )
 
 
-def stream_events(
-    spark: SparkSession, input_dir: str, *, max_files_per_trigger: int = 1
-) -> DataFrame:
+def stream_events(spark: SparkSession, input_dir: str) -> DataFrame:
     """File-source stream over an events-shaped parquet directory.
 
-    ``maxFilesPerTrigger`` slices the backlog into micro-batches so
-    tests exercise multi-batch behavior; production uses the default
-    (all available) with ``Trigger.AvailableNow``.
+    One file per micro-batch (``maxFilesPerTrigger=1``), so a staged
+    backlog of several files exercises multi-batch state.
     """
     return (
         spark.readStream.schema(EVENTS_SCHEMA)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
+        .option("maxFilesPerTrigger", 1)
         .parquet(input_dir)
     )
 
@@ -70,22 +67,6 @@ def tumbling_counts(
             "n_events",
             "sum_value",
         )
-    )
-
-
-def sliding_avg(
-    events: DataFrame,
-    *,
-    size: str = "1 hour",
-    slide: str = "15 minutes",
-    watermark: str = "2 hours",
-) -> DataFrame:
-    """Sliding-window smoothing (the Grafana-dashboard read shape, S20)."""
-    return (
-        events.withWatermark("ts", watermark)
-        .groupBy(F.window("ts", size, slide).alias("w"))
-        .agg(F.avg("value").alias("avg_value"))
-        .select(F.col("w.start").alias("window_start"), "avg_value")
     )
 
 
@@ -163,7 +144,6 @@ def start_foreach_batch(
     batch_fn: Callable[[DataFrame, int], None],
     *,
     checkpoint: str,
-    mode: str = "update",
 ):
     """``foreachBatch`` with a checkpoint: the transactional sink shape.
 
@@ -175,7 +155,7 @@ def start_foreach_batch(
     """
     return (
         df.writeStream.foreachBatch(batch_fn)
-        .outputMode(mode)
+        .outputMode("update")
         .option("checkpointLocation", checkpoint)
         .trigger(availableNow=True)
         .start()

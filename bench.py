@@ -42,9 +42,12 @@ SCALE_DIR = os.environ.get(
 NOISE_BAND_X = 2.5
 
 
-def _previous_local_payload(round_no: int | None) -> dict:
+def _previous_local_payload(
+    round_no: int | None, *, cpus: int | None = None
+) -> dict:
     """Newest committed BENCH_local_r*.json from a PRIOR round — the
-    per-query reference the band check compares against."""
+    per-query reference the band check compares against. With ``cpus``,
+    only payloads recorded on a host with that many CPUs qualify."""
     import re
 
     best_n, best = -1, {}
@@ -56,9 +59,11 @@ def _previous_local_payload(round_no: int | None) -> dict:
         if (round_no is None or n < round_no) and n > best_n:
             try:
                 with open(os.path.join(REPO, f)) as fh:
-                    best_n, best = n, json.load(fh)
+                    cand = json.load(fh)
             except Exception:
                 continue
+            if cpus is None or cand.get("host", {}).get("cpus") == cpus:
+                best_n, best = n, cand
     return best
 
 
@@ -71,6 +76,40 @@ def _band_outliers(
         n: [t, reference[n]]
         for n, t in timings.items()
         if reference.get(n, 0) >= 0.1 and t > NOISE_BAND_X * reference[n]
+    }
+
+
+def _bands(payload: dict, round_no: int | None) -> dict:
+    """Noise-band triage vs the previous round's committed payload:
+    entries above NOISE_BAND_X * reference are reported so a reader
+    separates uniform environment drift from single-entry plan
+    regressions without a by-hand diff.
+
+    Absolute seconds are only compared with a payload from a host with
+    the same CPU count (against a 32-core reference, a 4-core run's
+    outliers report host size, not plans). The RATIO bands — each
+    query normalized by its session's own q1 probe, so host swings,
+    which move probe and query together, cancel — compare with the
+    newest prior payload whatever its host.
+    """
+    def same_sf(ref: dict) -> dict:
+        # timings only comparable at the same scale factor
+        return ref if ref.get("sf") == payload["sf"] else {}
+
+    ref = same_sf(_previous_local_payload(round_no))
+    abs_ref = same_sf(
+        _previous_local_payload(round_no, cpus=payload["host"]["cpus"])
+    )
+    pairs = {
+        "band_outliers": ("queries", abs_ref),
+        "scale_band_outliers": ("scale_queries", abs_ref),
+        "ratio_band_outliers": ("query_ratios", ref),
+        "scale_ratio_band_outliers": ("scale_query_ratios", ref),
+    }
+    return {
+        key: _band_outliers(payload[field], reference[field])
+        for key, (field, reference) in pairs.items()
+        if reference.get(field) and payload.get(field)
     }
 
 
@@ -621,35 +660,8 @@ def main() -> None:
     except Exception:
         round_no = None
 
-    # Noise-band triage vs the previous round's committed payload
-    # (VERDICT r7 #1): entries above NOISE_BAND_X * reference are
-    # reported so a reader separates uniform environment drift from
-    # single-entry plan regressions without a by-hand diff.
-    ref = _previous_local_payload(round_no)
-    if ref.get("sf") != payload["sf"]:
-        ref = {}  # timings only comparable at the same scale factor
     payload["noise_band_x"] = NOISE_BAND_X
-    if ref.get("queries"):
-        payload["band_outliers"] = _band_outliers(
-            timings, ref["queries"]
-        )
-    if ref.get("scale_queries") and "scale_queries" in payload:
-        payload["scale_band_outliers"] = _band_outliers(
-            payload["scale_queries"], ref["scale_queries"]
-        )
-    # RATIO triage (VERDICT r8 #4) — the primary cross-round signal
-    # once the reference payload carries ratios: each query normalized
-    # by its session's own q1 probe, so host-contention swings (which
-    # move probe and query together) cancel and only genuine per-plan
-    # shifts cross the band.
-    if ref.get("query_ratios") and payload.get("query_ratios"):
-        payload["ratio_band_outliers"] = _band_outliers(
-            payload["query_ratios"], ref["query_ratios"]
-        )
-    if ref.get("scale_query_ratios") and payload.get("scale_query_ratios"):
-        payload["scale_ratio_band_outliers"] = _band_outliers(
-            payload["scale_query_ratios"], ref["scale_query_ratios"]
-        )
+    payload.update(_bands(payload, round_no))
     for key in (
         "band_outliers",
         "scale_band_outliers",

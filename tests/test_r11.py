@@ -190,9 +190,7 @@ def test_stream_curation_restart_equivalence(spark):
         )
 
         with _few_partitions(spark):
-            q = stream.start_foreach_batch(
-                src, fn, checkpoint=f"{work}/ckpt", mode="update"
-            )
+            q = stream.start_foreach_batch(src, fn, checkpoint=f"{work}/ckpt")
             try:
                 q.awaitTermination(300)
             except Exception:

@@ -159,15 +159,18 @@ def test_rest_partial_pages_accepted(spark):
 
 
 def test_rest_stream_replay_is_page_stable():
-    reader = rest.RestReviewsStreamReader({"pagesperbatch": "2", "maxpages": "6"})
-    start = reader.initialOffset()
-    rows1, end = reader.read(start)
-    first_batch = list(rows1)
-    assert end == {"page": 2} and len(first_batch) == 50
-    # restart replay: readBetweenOffsets over the same range must
-    # reproduce the batch exactly (page-stable fetch)
-    replayed = list(reader.readBetweenOffsets(start, end))
-    assert replayed == first_batch
+    reader = rest.RestReviewsStreamReader({"numpages": "6", "pagesize": "25"})
+    start, end = reader.initialOffset(), reader.latestOffset()
+    assert (start, end) == ({"page": 0}, {"page": 6})
+    parts = reader.partitions(start, end)
+    assert [p.page for p in parts] == list(range(6))
+    first = [row for p in parts for row in reader.read(p)]
+    assert len(first) == 150
+    # restart replay: re-reading the same partitions must reproduce the
+    # micro-batch exactly (page-stable fetch)
+    assert [row for p in parts for row in reader.read(p)] == first
+    # a committed offset with no new pages plans no partitions
+    assert reader.partitions(end, end) == []
 
 
 # --- golden-payload ingest (S3, M3) -----------------------------------
@@ -302,8 +305,7 @@ def test_rest_stream_reads_pages_as_microbatches(spark, tmp_path):
     rest.register(spark)
     stream = (
         spark.readStream.format("rest_reviews")
-        .option("numPages", "0")
-        .option("maxPages", "3")
+        .option("numPages", "3")
         .option("pageSize", "10")
         .load()
     )
@@ -324,7 +326,7 @@ def test_rest_stream_reads_pages_as_microbatches(spark, tmp_path):
         time.sleep(0.5)
     q.stop()
     got = spark.table("rest_stream")
-    assert got.count() == 30  # 3 pages x 10, then empty batches
+    assert got.count() == 30  # 3 pages x 10, drained by the first micro-batch
     pages = sorted(r.page_number for r in got.select("page_number").distinct().collect())
     assert pages == [0, 1, 2]
     # page contents match the batch reader on the same options
@@ -337,6 +339,45 @@ def test_rest_stream_reads_pages_as_microbatches(spark, tmp_path):
     assert sorted(r.review_id for r in got.collect()) == sorted(
         r.review_id for r in batch.collect()
     )
+
+
+def test_rest_stream_available_now_drains_backlog_once(spark, tmp_path):
+    """One AvailableNow start drains the page backlog as ONE micro-batch
+    of one partition per page; a restart on the same checkpoint writes
+    nothing; a larger ``numPages`` (the next timer fire) delivers only
+    the new pages."""
+    from az_datapipeline_sentiment_analysis_spark.streaming import stream
+
+    rest.register(spark)
+    ckpt = str(tmp_path / "ckpt")
+    batches = []
+
+    def record(batch_df, batch_id):
+        ids = sorted(r.review_id for r in batch_df.select("review_id").collect())
+        batches.append((batch_id, batch_df.rdd.getNumPartitions(), ids))
+
+    def start(n_pages):
+        src = (
+            spark.readStream.format("rest_reviews")
+            .option("numPages", n_pages)
+            .option("pageSize", 4)
+            .load()
+        )
+        stream.start_foreach_batch(src, record, checkpoint=ckpt).awaitTermination(120)
+
+    def page_ids(n_pages):
+        df = spark.read.format("rest_reviews").option("numPages", n_pages)
+        return sorted(r.review_id for r in df.option("pageSize", 4).load().collect())
+
+    start(3)
+    assert batches == [(0, 3, page_ids(3))]
+    start(3)
+    assert len(batches) == 1  # restart, no new pages: no batch
+    start(5)
+    assert len(batches) == 2
+    batch_id, n_parts, ids = batches[1]
+    assert (batch_id, n_parts) == (1, 2)
+    assert ids == sorted(set(page_ids(5)) - set(page_ids(3)))
 
 
 def test_jdbc_predicate_striping():

@@ -125,7 +125,7 @@ def test_foreach_batch_incremental_pipeline(spark, tmp_path):
         scored = incremental.score_unprocessed(batch_df)
         incremental.merge_results(spark, scored, res)
 
-    q = stream.start_foreach_batch(texts, sink, checkpoint=ckpt, mode="append")
+    q = stream.start_foreach_batch(texts, sink, checkpoint=ckpt)
     q.awaitTermination(120)
 
     out = spark.read.parquet(res)
@@ -133,14 +133,14 @@ def test_foreach_batch_incremental_pipeline(spark, tmp_path):
     assert out.select("record_id").distinct().count() == 3
 
     # restart the stream over the same checkpoint: nothing new lands
-    q2 = stream.start_foreach_batch(texts, sink, checkpoint=ckpt, mode="append")
+    q2 = stream.start_foreach_batch(texts, sink, checkpoint=ckpt)
     q2.awaitTermination(120)
     assert spark.read.parquet(res).count() == 3
 
 
 def test_stateful_running_totals(spark, events_dir):
     """applyInPandasWithState totals must converge to the batch agg."""
-    src = stream.stream_events(spark, events_dir, max_files_per_trigger=1)
+    src = stream.stream_events(spark, events_dir)
     q = stream.start_to_memory(
         stream.running_user_totals(src), "running_totals", mode="update"
     )
