@@ -14,9 +14,12 @@ semantics:
   arrive as Arrow record batches instead of the reference's serial
   10-doc loop, so throughput scales with executors x batch size.
 
-Every function here is defined by a tokenizer regex + arithmetic so the
-DuckDB oracle can express the exact same computation (see
-plans/queries.py for the SQL twins).
+Every JVM lexicon score (sentiment, language-ID, stopword ratio) counts
+through ONE function, ``lexicon_count_on_tokens``: ``size(filter(toks,
+t -> t IN (<words>)))``, where Catalyst turns a literal list longer than
+ten words into a hash ``InSet``. Its DuckDB twin is ``_hits_sql`` in
+plans/queries.py, and the oracle's label, confidence and language-ID
+fragments there are built from the same word lists and thresholds.
 
 Scale: all the expr-based paths are embarrassingly parallel scans —
 no shuffle, no state; they run at 100 TB as fast as parquet can be read.
@@ -60,46 +63,37 @@ def _sql_word_list(words: tuple[str, ...]) -> str:
     return ", ".join(f"'{w}'" for w in words)
 
 
+def _tokens_sql(col: str) -> str:
+    return f"regexp_extract_all(lower({col}), '{TOKEN_RE}', 0)"
+
+
 def tokens_expr(col: str = "text") -> Column:
     """Lowercased alpha tokens (JVM-side, no UDF)."""
-    return F.expr(f"regexp_extract_all(lower({col}), '{TOKEN_RE}', 0)")
+    return F.expr(_tokens_sql(col))
 
 
-def _lexicon_count_expr(col: str, words: tuple[str, ...]) -> Column:
-    arr = f"array({_sql_word_list(words)})"
-    return F.expr(
-        f"size(filter(regexp_extract_all(lower({col}), '{TOKEN_RE}', 0),"
-        f" t -> array_contains({arr}, t)))"
-    )
+def lexicon_count_on_tokens(toks: str, words: tuple[str, ...]) -> Column:
+    """Hits of ``words`` among the tokens ``toks`` — a token column name
+    or a SQL array expression.
 
-
-def lexicon_count_on_tokens(toks_col: str, words: tuple[str, ...]) -> Column:
-    """Lexicon hit count over an ALREADY-tokenized array column.
-
-    Prefer this when a query needs several counts over the same text:
-    tokenize once into a column, count many times. The single-column
-    `_lexicon_count_expr` re-runs the tokenizer regex per count — fine
-    for one count, 4-6x wasted regex work for sentiment/lang-id shapes
-    (CollapseProject keeps a materialized token column evaluated once
-    because a non-cheap alias referenced more than once is not inlined).
+    When a query needs several counts over the same text, tokenize once
+    into a column and count many times over it: CollapseProject keeps a
+    materialized token column evaluated once, because a non-cheap alias
+    referenced more than once is not inlined.
     """
-    arr = f"array({_sql_word_list(words)})"
-    return F.expr(f"size(filter({toks_col}, t -> array_contains({arr}, t)))")
+    return F.expr(f"size(filter({toks}, t -> t IN ({_sql_word_list(words)})))")
 
 
 def sentiment_components_expr(col: str = "text") -> tuple[Column, Column]:
     """(pos_count, neg_count) as JVM columns."""
-    return (
-        _lexicon_count_expr(col, POSITIVE_WORDS),
-        _lexicon_count_expr(col, NEGATIVE_WORDS),
-    )
+    return sentiment_components_on_tokens(_tokens_sql(col))
 
 
-def sentiment_components_on_tokens(toks_col: str) -> tuple[Column, Column]:
+def sentiment_components_on_tokens(toks: str) -> tuple[Column, Column]:
     """(pos_count, neg_count) over a pre-tokenized array column."""
     return (
-        lexicon_count_on_tokens(toks_col, POSITIVE_WORDS),
-        lexicon_count_on_tokens(toks_col, NEGATIVE_WORDS),
+        lexicon_count_on_tokens(toks, POSITIVE_WORDS),
+        lexicon_count_on_tokens(toks, NEGATIVE_WORDS),
     )
 
 
@@ -209,15 +203,10 @@ def lang_id_on_tokens(text_col: str, toks_col: str) -> Column:
     """Heuristic language ID over a pre-tokenized array column: CJK
     chars -> zh, else argmax stopword hits with fixed priority
     en > es > de > fr, else 'und' (the CJK probe reads the raw text)."""
-    hits = {
-        k: lexicon_count_on_tokens(toks_col, v)
-        for k, v in LANG_LEXICONS.items()
-    }
-    return _lang_id_from_hits(text_col, hits)
-
-
-def _lang_id_from_hits(text_col: str, hits: dict) -> Column:
-    en, es, de, fr = hits["en"], hits["es"], hits["de"], hits["fr"]
+    en, es, de, fr = (
+        lexicon_count_on_tokens(toks_col, LANG_LEXICONS[k])
+        for k in ("en", "es", "de", "fr")
+    )
     return (
         F.when(F.col(text_col).rlike(_CJK_RANGE), F.lit("zh"))
         .when((en >= es) & (en >= de) & (en >= fr) & (en > 0), F.lit("en"))

@@ -822,10 +822,11 @@ def _gif_lzw_encode(data: bytes, min_code_size: int = 8) -> bytes:
             # invariant local (ADVICE r10): a future constant bump
             # must fail loudly here, not emit 13-bit codes external
             # decoders reject.
-            assert width <= 12, (
-                f"GIF LZW width {width} exceeds the 12-bit cap; "
-                f"_GIF_MAX_TABLE={_GIF_MAX_TABLE} must stay < 4096"
-            )
+            if width > 12:
+                raise RuntimeError(
+                    f"GIF LZW width {width} exceeds the 12-bit cap; "
+                    f"_GIF_MAX_TABLE={_GIF_MAX_TABLE} must stay < 4096"
+                )
         prefix = bytes([b])
         if next_code >= _GIF_MAX_TABLE:
             emit(clear)
@@ -1190,14 +1191,15 @@ def _jpeg_category(v: int) -> int:
 def jpeg_encode_gray_blocks(pix: np.ndarray) -> bytes:
     """Encode an 8x8 BLOCK-CONSTANT (h, w) uint8 image as a real
     baseline sequential grayscale JFIF. Dimensions must be multiples
-    of 8 and every 8x8 block constant — asserted, because only then
-    is the roundtrip pixel-exact (DC-only blocks, DC quantizer 8)."""
+    of 8 and every 8x8 block constant (ValueError otherwise), because
+    only then is the roundtrip pixel-exact (DC-only blocks, DC
+    quantizer 8)."""
     h, w = pix.shape
-    assert h % 8 == 0 and w % 8 == 0, (w, h)
+    if h % 8 or w % 8:
+        raise ValueError(f"dimensions {w}x{h} must be multiples of 8")
     blocks = pix.reshape(h // 8, 8, w // 8, 8).swapaxes(1, 2)
-    assert (blocks.min(axis=(2, 3)) == blocks.max(axis=(2, 3))).all(), (
-        "fixture must be 8x8 block-constant"
-    )
+    if not (blocks.min(axis=(2, 3)) == blocks.max(axis=(2, 3))).all():
+        raise ValueError("fixture must be 8x8 block-constant")
 
     def seg(marker: int, payload: bytes) -> bytes:
         return bytes([0xFF, marker]) + (len(payload) + 2).to_bytes(2, "big") \
@@ -1341,7 +1343,8 @@ def jpeg_decode_gray(b: bytes) -> np.ndarray:
     dc_id = ac_id = qt_id = 0
     scan_start = -1
     while pos < len(b):
-        assert b[pos] == 0xFF, hex(b[pos])
+        if b[pos] != 0xFF:
+            raise ValueError(f"expected a JPEG marker at {pos}, got {b[pos]:#x}")
         marker = b[pos + 1]
         if marker == 0xD9:
             break

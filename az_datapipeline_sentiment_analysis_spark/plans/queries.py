@@ -29,11 +29,13 @@ from pyspark.sql import functions as F
 from ..catalog import table as _t
 from ..functions.arrays import cosine_expr
 from ..functions.text import (
+    LANG_LEXICONS,
     NEG_THRESHOLD,
     NEGATIVE_WORDS,
     POS_THRESHOLD,
     POSITIVE_WORDS,
     STOPWORDS_EN,
+    TOKEN_RE,
     alpha_ratio_expr,
     fingerprint_expr,
     sentiment_components_expr,
@@ -52,6 +54,7 @@ from ..operators import dedup as dd
 from ..operators import multimodal as mm
 from ..operators import similarity as sim
 from ..operators.asof import asof_join
+from ..session import conf_scope
 from ..streaming.incremental import score_unprocessed
 
 
@@ -72,9 +75,60 @@ def _q(name: str, sql: str | None, doc: str = ""):
     return deco
 
 
-POS_SQL = _sql_word_list(POSITIVE_WORDS)
-NEG_SQL = _sql_word_list(NEGATIVE_WORDS)
-STOP_SQL = _sql_word_list(STOPWORDS_EN)
+# DuckDB twins of the functions/text.py lexicon scorers. Every oracle
+# that scores text builds from these, so the word lists and thresholds
+# live in functions/text.py alone.
+
+
+def _hits_sql(words: tuple[str, ...]) -> str:
+    """``lexicon_count_on_tokens`` over the tokens of ``text``."""
+    return (
+        f"len(list_filter(regexp_extract_all(lower(text), '{TOKEN_RE}'),"
+        f" t -> t IN ({_sql_word_list(words)})))"
+    )
+
+
+_POS_NEG_SQL = (
+    f"{_hits_sql(POSITIVE_WORDS)} AS pos, {_hits_sql(NEGATIVE_WORDS)} AS neg"
+)
+
+# sentiment_label_expr / sentiment_confidence_expr (before rounding)
+_SENTIMENT_CASE = f"""
+    CASE WHEN pos + neg = 0 THEN 'neutral'
+         WHEN pos * 1.0 / (pos + neg) >= {POS_THRESHOLD} THEN 'positive'
+         WHEN pos * 1.0 / (pos + neg) <= {NEG_THRESHOLD} THEN 'negative'
+         ELSE 'mixed' END
+"""
+_CONFIDENCE_SQL = (
+    "CASE WHEN pos + neg = 0 THEN 0.5 ELSE pos * 1.0 / (pos + neg) END"
+)
+
+# lang_id_on_tokens: the CJK probe and per-language hit columns of
+# _LANG_HITS_SQL feed _LANG_CASE
+_LANG_HITS_SQL = f"regexp_matches(text, '{_CJK_RANGE}') AS cjk, " + ", ".join(
+    f"{_hits_sql(words)} AS {lang}" for lang, words in LANG_LEXICONS.items()
+)
+_LANG_CASE = """
+    CASE WHEN cjk THEN 'zh'
+         WHEN en >= es AND en >= de AND en >= fr AND en > 0 THEN 'en'
+         WHEN es >= de AND es >= fr AND es > 0 THEN 'es'
+         WHEN de >= fr AND de > 0 THEN 'de'
+         WHEN fr > 0 THEN 'fr'
+         ELSE 'und' END
+"""
+
+_SENTIMENT_ORACLE = f"""
+    WITH scored AS (
+      SELECT doc_id, {_POS_NEG_SQL} FROM documents
+    )
+    SELECT CAST(doc_id AS VARCHAR) AS record_id,
+           {_SENTIMENT_CASE} AS sentiment,
+           ROUND({_CONFIDENCE_SQL}, 6) AS confidence
+    FROM scored
+"""
+# the pipeline entries seed processed = 0 on doc_id % 3 = 0 and score
+# exactly those rows
+_PIPELINE_ORACLE = _SENTIMENT_ORACLE + "    WHERE doc_id % 3 = 0\n"
 
 
 @_contextmanager
@@ -89,16 +143,8 @@ def _few_partitions(spark: SparkSession, n: int = 8):
     overhead dominates small inputs. Restores the caller's setting on
     exit; production sizes this to data volume, not cores.
     """
-    key = "spark.sql.shuffle.partitions"
-    prev = spark.conf.get(key, None)
-    spark.conf.set(key, str(n))
-    try:
+    with conf_scope(spark, {"spark.sql.shuffle.partitions": str(n)}):
         yield
-    finally:
-        if prev is None:
-            spark.conf.unset(key)
-        else:
-            spark.conf.set(key, prev)
 
 
 # =====================================================================
@@ -1310,30 +1356,6 @@ def window_session(spark, sf):
 # Text / ML operators (north star)
 # =====================================================================
 
-_SENTIMENT_CASE = f"""
-    CASE WHEN pos + neg = 0 THEN 'neutral'
-         WHEN pos * 1.0 / (pos + neg) >= {POS_THRESHOLD} THEN 'positive'
-         WHEN pos * 1.0 / (pos + neg) <= {NEG_THRESHOLD} THEN 'negative'
-         ELSE 'mixed' END
-"""
-
-_SENTIMENT_ORACLE = f"""
-    WITH scored AS (
-      SELECT doc_id,
-             len(list_filter(regexp_extract_all(lower(text), '[a-z]+'),
-                 t -> t IN ({POS_SQL}))) AS pos,
-             len(list_filter(regexp_extract_all(lower(text), '[a-z]+'),
-                 t -> t IN ({NEG_SQL}))) AS neg
-      FROM documents
-    )
-    SELECT CAST(doc_id AS VARCHAR) AS record_id,
-           {_SENTIMENT_CASE} AS sentiment,
-           ROUND(CASE WHEN pos + neg = 0 THEN 0.5
-                      ELSE pos * 1.0 / (pos + neg) END, 6) AS confidence
-    FROM scored
-"""
-
-
 @_q(
     "sentiment_score",
     _SENTIMENT_ORACLE,
@@ -1347,7 +1369,7 @@ def sentiment_score(spark, sf):
     return scored.select(
         F.col("doc_id").cast("string").alias("record_id"),
         F.col("s.sentiment").alias("sentiment"),
-        F.round(F.col("s.confidenceScores.positive"), 6).alias("confidence"),
+        F.col("s.confidenceScores.positive").alias("confidence"),
     )
 
 
@@ -1378,30 +1400,7 @@ def sentiment_score_sql(spark, sf):
 
 @_q(
     "pipeline_sentiment_batch",
-    f"""
-    WITH src AS (
-      SELECT doc_id AS id, text AS text_column,
-             CASE WHEN doc_id % 3 = 0 THEN 0 ELSE 1 END AS processed
-      FROM documents
-    ),
-    unprocessed AS (
-      SELECT CAST(id AS VARCHAR) AS id, 'en' AS language, text_column AS text
-      FROM src WHERE processed = 0
-    ),
-    scored AS (
-      SELECT id,
-             len(list_filter(regexp_extract_all(lower(text), '[a-z]+'),
-                 t -> t IN ({POS_SQL}))) AS pos,
-             len(list_filter(regexp_extract_all(lower(text), '[a-z]+'),
-                 t -> t IN ({NEG_SQL}))) AS neg
-      FROM unprocessed
-    )
-    SELECT id AS record_id,
-           {_SENTIMENT_CASE} AS sentiment,
-           ROUND(CASE WHEN pos + neg = 0 THEN 0.5
-                      ELSE pos * 1.0 / (pos + neg) END, 6) AS confidence
-    FROM scored
-    """,
+    _PIPELINE_ORACLE,
     "EP2 end-to-end parity: incremental scan (processed=0) -> project/"
     "cast (S9) -> vectorized sentiment (S11) -> results shape (S15).",
 )
@@ -1414,30 +1413,13 @@ def pipeline_sentiment_batch(spark, sf):
     return score_unprocessed(src)
 
 
-_LANG_HIT = (
-    "len(list_filter(regexp_extract_all(lower(text), '[a-z]+'), t -> t IN ({})))"
-)
-
-
 @_q(
     "lang_id",
     f"""
     WITH h AS (
-      SELECT doc_id,
-             regexp_matches(text, '{_CJK_RANGE}') AS cjk,
-             {_LANG_HIT.format("'the', 'and', 'of', 'to', 'a'")} AS en,
-             {_LANG_HIT.format("'el', 'la', 'que', 'los', 'una'")} AS es,
-             {_LANG_HIT.format("'der', 'die', 'und', 'das', 'ein'")} AS de,
-             {_LANG_HIT.format("'le', 'les', 'des', 'une', 'est'")} AS fr
-      FROM documents
+      SELECT doc_id, {_LANG_HITS_SQL} FROM documents
     )
-    SELECT doc_id,
-           CASE WHEN cjk THEN 'zh'
-                WHEN en >= es AND en >= de AND en >= fr AND en > 0 THEN 'en'
-                WHEN es >= de AND es >= fr AND es > 0 THEN 'es'
-                WHEN de >= fr AND de > 0 THEN 'de'
-                WHEN fr > 0 THEN 'fr'
-                ELSE 'und' END AS lang_pred
+    SELECT doc_id, {_LANG_CASE} AS lang_pred
     FROM h
     """,
     "Heuristic language ID (n-gram/stopword votes; S21 language_filter"
@@ -1477,7 +1459,7 @@ def language_filter(spark, sf):
              length(text) AS n,
              length(regexp_replace(text, '[^A-Za-z]', '', 'g')) AS alpha,
              len(regexp_extract_all(lower(text), '[a-z]+')) AS toks,
-             {_LANG_HIT.format(STOP_SQL)} AS stop_hits
+             {_hits_sql(STOPWORDS_EN)} AS stop_hits
       FROM documents
     )
     SELECT doc_id, alpha_ratio, stopword_ratio,
@@ -1797,17 +1779,11 @@ def fingerprint_rolling(spark, sf):
     "gold_dashboard",
     f"""
     WITH scored AS (
-      SELECT doc_id, lang, source,
-             len(list_filter(regexp_extract_all(lower(text), '[a-z]+'),
-                 t -> t IN ({POS_SQL}))) AS pos,
-             len(list_filter(regexp_extract_all(lower(text), '[a-z]+'),
-                 t -> t IN ({NEG_SQL}))) AS neg
-      FROM documents
+      SELECT doc_id, lang, source, {_POS_NEG_SQL} FROM documents
     ),
     labeled AS (
       SELECT lang, source, {_SENTIMENT_CASE} AS sentiment,
-             CASE WHEN pos + neg = 0 THEN 0.5
-                  ELSE pos * 1.0 / (pos + neg) END AS confidence
+             {_CONFIDENCE_SQL} AS confidence
       FROM scored
     )
     SELECT lang, sentiment, COUNT(*) AS n_docs,

@@ -24,7 +24,7 @@ from pyspark.sql import types as T
 from ..catalog import spread as _sp
 from ..catalog import table as _t
 from ..operators import dedup as dd
-from .queries import _q
+from .queries import _LANG_CASE, _LANG_HITS_SQL, _q
 
 # =====================================================================
 # Prefix-filtered exact similarity join (AllPairs / PPJoin)
@@ -1209,32 +1209,14 @@ def itemcf_neighbors(spark, sf):
 # Per-class classification report (precision / recall / F1 / support)
 # =====================================================================
 
-def _clsreport_oracle_sql() -> str:
-    """lang_id's prediction CTE (verbatim arithmetic) scored against
-    the gold ``lang`` column — per-class counts, every metric one
-    exact-integer division."""
-    from ..functions.text import _CJK_RANGE
-    from .queries import _LANG_HIT
-
-    return f"""
+# lang_id's prediction fragments scored against the gold ``lang``
+# column — per-class counts, every metric one exact-integer division
+_CLSREPORT_ORACLE = f"""
     WITH h AS (
-      SELECT lang AS gold,
-             regexp_matches(text, '{_CJK_RANGE}') AS cjk,
-             {_LANG_HIT.format("'the', 'and', 'of', 'to', 'a'")} AS en,
-             {_LANG_HIT.format("'el', 'la', 'que', 'los', 'una'")} AS es,
-             {_LANG_HIT.format("'der', 'die', 'und', 'das', 'ein'")} AS de,
-             {_LANG_HIT.format("'le', 'les', 'des', 'une', 'est'")} AS fr
-      FROM documents
+      SELECT lang AS gold, {_LANG_HITS_SQL} FROM documents
     ),
     scored AS (
-      SELECT gold,
-             CASE WHEN cjk THEN 'zh'
-                  WHEN en >= es AND en >= de AND en >= fr AND en > 0 THEN 'en'
-                  WHEN es >= de AND es >= fr AND es > 0 THEN 'es'
-                  WHEN de >= fr AND de > 0 THEN 'de'
-                  WHEN fr > 0 THEN 'fr'
-                  ELSE 'und' END AS pred
-      FROM h
+      SELECT gold, {_LANG_CASE} AS pred FROM h
     ),
     grid AS (
       SELECT gold, pred, CAST(COUNT(*) AS BIGINT) AS c
@@ -1279,7 +1261,7 @@ def _clsreport_oracle_sql() -> str:
 
 @_q(
     "classification_report",
-    _clsreport_oracle_sql(),
+    _CLSREPORT_ORACLE,
     "Per-class precision / recall / F1 / support of the lang_id"
     " heuristic scored against the gold lang column — the"
     " classifier-eval primitive (sklearn's classification_report"

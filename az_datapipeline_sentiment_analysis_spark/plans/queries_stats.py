@@ -22,6 +22,7 @@ import warnings
 from pyspark.sql import functions as F
 
 from ..catalog import table as _t
+from ..session import conf_scope
 from .queries import _q
 
 
@@ -374,9 +375,11 @@ def scan_partitioned(spark, sf):
         )
     )
     plan = df._jdf.queryExecution().executedPlan().toString()
-    assert "PartitionFilters: [" in plan and "event_type" in plan.split(
-        "PartitionFilters:"
-    )[1].split("]")[0], "partition predicate did not prune"
+    if not (
+        "PartitionFilters: [" in plan
+        and "event_type" in plan.split("PartitionFilters:")[1].split("]")[0]
+    ):
+        raise RuntimeError("partition predicate did not prune")
     return df
 
 
@@ -417,9 +420,7 @@ def join_bucketed(spark, sf):
             t_l, bucket_col="l_orderkey", n_buckets=8, sort_col="l_orderkey",
         )
         _BUCKETED.add(sf)
-    prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try:
+    with conf_scope(spark, {"spark.sql.autoBroadcastJoinThreshold": "-1"}):
         o, li = spark.table(t_o), spark.table(t_l)
         df = (
             o.join(li, o.o_orderkey == li.l_orderkey)
@@ -431,9 +432,8 @@ def join_bucketed(spark, sf):
                 ).alias("revenue"),
             )
         )
-        assert not plan_has_shuffle(df), "bucketed join/agg must not shuffle"
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
+        if plan_has_shuffle(df):
+            raise RuntimeError("bucketed join/agg must not shuffle")
     return df
 
 
@@ -597,7 +597,10 @@ def compact_files(spark, sf):
         )
         compact(spark, frag, dst)
         n_after = len([f for f in os.listdir(dst) if f.endswith(".parquet")])
-        assert n_after < n_before, (n_after, n_before)
+        if n_after >= n_before:
+            raise RuntimeError(
+                f"compaction did not reduce files ({n_before} -> {n_after})"
+            )
         _COMPACTED[sf] = dst
         path = dst
     df = spark.read.parquet(path)
@@ -649,9 +652,13 @@ def scan_sorted_skip(spark, sf):
         .select("event_id", "ts", F.round("value", 4).alias("value"))
     )
     plan = formatted_plan(df)
-    assert "PushedFilters" in plan and "ts" in plan.split("PushedFilters")[1].split(
-        "]"
-    )[0], "ts range predicate was not pushed to the parquet reader"
+    if not (
+        "PushedFilters" in plan
+        and "ts" in plan.split("PushedFilters")[1].split("]")[0]
+    ):
+        raise RuntimeError(
+            "ts range predicate was not pushed to the parquet reader"
+        )
     return df
 
 
@@ -715,8 +722,10 @@ def scan_zorder_skip(spark, sf):
         )
         # the layout's reason to exist: EACH single-column range
         # predicate must rule out files from the footers alone
-        assert m_u < tot, f"user_id predicate skipped nothing ({m_u}/{tot})"
-        assert m_t < tot, f"ts predicate skipped nothing ({m_t}/{tot})"
+        if m_u >= tot:
+            raise RuntimeError(f"user_id predicate skipped nothing ({m_u}/{tot})")
+        if m_t >= tot:
+            raise RuntimeError(f"ts predicate skipped nothing ({m_t}/{tot})")
         _ZORDERED[sf] = path
 
     df = (
@@ -730,9 +739,10 @@ def scan_zorder_skip(spark, sf):
     )
     plan = formatted_plan(df)
     pushed = plan.split("PushedFilters")[1].split("]")[0] if "PushedFilters" in plan else ""
-    assert "user_id" in pushed and "ts" in pushed, (
-        "range predicates were not pushed to the parquet reader"
-    )
+    if "user_id" not in pushed or "ts" not in pushed:
+        raise RuntimeError(
+            "range predicates were not pushed to the parquet reader"
+        )
     return df
 
 
@@ -822,16 +832,11 @@ def scan_dpp(spark, sf):
     " broadcast is disabled because the rewrite targets shuffle joins.",
 )
 def join_bloom_runtime(spark, sf):
-    prev_app = spark.conf.get(
-        "spark.sql.optimizer.runtime.bloomFilter.applicationSideScanSizeThreshold"
-    )
-    prev_bc = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    spark.conf.set(
-        "spark.sql.optimizer.runtime.bloomFilter.applicationSideScanSizeThreshold",
-        "0",
-    )
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try:
+    with conf_scope(spark, {
+        "spark.sql.optimizer.runtime.bloomFilter"
+        ".applicationSideScanSizeThreshold": "0",
+        "spark.sql.autoBroadcastJoinThreshold": "-1",
+    }):
         o = _t(spark, sf, "orders").filter(
             F.col("o_orderpriority") == "1-URGENT"
         )
@@ -856,12 +861,6 @@ def join_bloom_runtime(spark, sf):
                 stacklevel=2,
             )
         return df
-    finally:
-        spark.conf.set(
-            "spark.sql.optimizer.runtime.bloomFilter.applicationSideScanSizeThreshold",
-            prev_app,
-        )
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev_bc)
 
 
 @_q(
@@ -1143,22 +1142,16 @@ def dynamic_partition_overwrite(spark, sf):
                 "event_type",
             )
         )
-        key = "spark.sql.sources.partitionOverwriteMode"
-        prev = spark.conf.get(key, None)
-        spark.conf.set(key, "dynamic")
-        try:
+        with conf_scope(
+            spark, {"spark.sql.sources.partitionOverwriteMode": "dynamic"}
+        ):
             corrected.write.mode("overwrite").partitionBy(
                 "event_type"
             ).parquet(path)
-        finally:
-            if prev is None:
-                spark.conf.unset(key)
-            else:
-                spark.conf.set(key, prev)
-        after = sorted(os.listdir(untouched))
-        assert before == after, (
-            "dynamic overwrite rewrote an untouched partition"
-        )
+        if sorted(os.listdir(untouched)) != before:
+            raise RuntimeError(
+                "dynamic overwrite rewrote an untouched partition"
+            )
         _DPO[sf] = path
     return spark.read.parquet(path).select(
         "event_id", "event_type", F.round("value", 4).alias("value")

@@ -38,7 +38,7 @@ from pyspark.sql import functions as F
 
 from ..catalog import table as _t
 from ..streaming import stream
-from .queries import NEG_SQL, POS_SQL, _few_partitions, _q
+from .queries import _PIPELINE_ORACLE, _few_partitions, _q
 
 # per-process cache: sf_dir -> staged streaming input dir
 _STAGED: dict[tuple[str, str], str] = {}
@@ -186,33 +186,7 @@ def stream_session_agg(spark, sf):
 
 @_q(
     "pipeline_incremental_run",
-    f"""
-    WITH src AS (
-      SELECT doc_id AS id, text AS text_column,
-             CASE WHEN doc_id % 3 = 0 THEN 0 ELSE 1 END AS processed
-      FROM documents
-    ),
-    unprocessed AS (
-      SELECT CAST(id AS VARCHAR) AS id, text_column AS text
-      FROM src WHERE processed = 0
-    ),
-    scored AS (
-      SELECT id,
-             len(list_filter(regexp_extract_all(lower(text), '[a-z]+'),
-                 t -> t IN ({POS_SQL}))) AS pos,
-             len(list_filter(regexp_extract_all(lower(text), '[a-z]+'),
-                 t -> t IN ({NEG_SQL}))) AS neg
-      FROM unprocessed
-    )
-    SELECT id AS record_id,
-           CASE WHEN pos + neg = 0 THEN 'neutral'
-                WHEN pos * 1.0 / (pos + neg) >= 0.625 THEN 'positive'
-                WHEN pos * 1.0 / (pos + neg) <= 0.375 THEN 'negative'
-                ELSE 'mixed' END AS sentiment,
-           ROUND(CASE WHEN pos + neg = 0 THEN 0.5
-                      ELSE pos * 1.0 / (pos + neg) END, 6) AS confidence
-    FROM scored
-    """,
+    _PIPELINE_ORACLE,
     "EP2 run end-to-end THROUGH the incremental module (not just the"
     " logical plan): stage a SourceTable, run_increment scores the"
     " processed=0 rows, idempotent-merges results, flips flags via"

@@ -15,6 +15,8 @@ nothing in the query code depends on local mode.
 from __future__ import annotations
 
 import os
+from collections.abc import Iterator, Mapping
+from contextlib import contextmanager
 
 from pyspark.sql import SparkSession
 
@@ -41,6 +43,23 @@ def _default_driver_mem(cpus: int) -> str:
     host = _host_mem_gib()
     cap = max(4, host // 3) if host else 16
     return f"{min(32, cpus, cap)}g"
+
+
+@contextmanager
+def conf_scope(spark: SparkSession, confs: Mapping[str, str]) -> Iterator[None]:
+    """Set ``confs`` on the session for the ``with`` body, then put each
+    key back as it was: its old value, or unset if it had none."""
+    prev = {k: spark.conf.get(k, None) for k in confs}
+    for k, v in confs.items():
+        spark.conf.set(k, v)
+    try:
+        yield
+    finally:
+        for k, v in prev.items():
+            if v is None:
+                spark.conf.unset(k)
+            else:
+                spark.conf.set(k, v)
 
 
 def get_spark(

@@ -27,6 +27,12 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession
 
+from .session import conf_scope
+
+# INT96 (the legacy default) carries NO min/max statistics, which
+# silently disables every timestamp skip the clustered layouts exist for
+_STATS_TIMESTAMPS = {"spark.sql.parquet.outputTimestampType": "TIMESTAMP_MICROS"}
+
 
 def write_bucketed(
     df: DataFrame,
@@ -85,21 +91,13 @@ def write_sorted(
     bounds; the sort is per-partition (no global sort barrier).
     """
     n = n_files or df.sparkSession.sparkContext.defaultParallelism
-    spark = df.sparkSession
-    # INT96 (the legacy default) carries NO min/max statistics, which
-    # silently disables every timestamp skip this layout exists for
-    prev = spark.conf.get("spark.sql.parquet.outputTimestampType", None)
-    spark.conf.set("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
-    try:
+    with conf_scope(df.sparkSession, _STATS_TIMESTAMPS):
         (
             df.repartitionByRange(n, sort_col)
             .sortWithinPartitions(sort_col)
             .write.mode("overwrite")
             .parquet(path)
         )
-    finally:
-        if prev is not None:
-            spark.conf.set("spark.sql.parquet.outputTimestampType", prev)
 
 
 def write_zorder(
@@ -128,8 +126,6 @@ def write_zorder(
     """
     from pyspark.sql import functions as F
 
-    spark = df.sparkSession
-
     def _num(col: str) -> str:
         # order-preserving numeric view (timestamps -> epoch seconds)
         return f"cast({col} as double)"
@@ -155,9 +151,7 @@ def write_zorder(
         f" + shiftleft(({b1} >> i) & 1, 2 * i)"
         f" + shiftleft(({b2} >> i) & 1, 2 * i + 1))"
     )
-    prev = spark.conf.get("spark.sql.parquet.outputTimestampType", None)
-    spark.conf.set("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
-    try:
+    with conf_scope(df.sparkSession, _STATS_TIMESTAMPS):
         (
             df.withColumn("__z", F.expr(z))
             .repartitionByRange(n_files, "__z")
@@ -166,9 +160,6 @@ def write_zorder(
             .write.mode("overwrite")
             .parquet(path)
         )
-    finally:
-        if prev is not None:
-            spark.conf.set("spark.sql.parquet.outputTimestampType", prev)
 
 
 def zorder_skippable_files(path: str, col: str, lo, hi) -> tuple[int, int]:

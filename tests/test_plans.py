@@ -963,3 +963,19 @@ def test_plans_modules_do_not_name_import_kernel_bearing_siblings():
         "plans modules from-name-import kernel-bearing siblings "
         f"(worker-side circular import hazard): {offenders}"
     )
+
+
+def test_package_has_no_assert_statements():
+    """Invariant checks in the package raise explicitly: ``python -O``
+    strips ``assert`` statements, and with them the check."""
+    import ast
+    import pathlib
+
+    pkg = pathlib.Path("az_datapipeline_sentiment_analysis_spark")
+    offenders = [
+        f"{p}:{node.lineno}"
+        for p in sorted(pkg.rglob("*.py"))
+        for node in ast.walk(ast.parse(p.read_text()))
+        if isinstance(node, ast.Assert)
+    ]
+    assert not offenders, f"assert statements in the package: {offenders}"

@@ -11,6 +11,7 @@ from __future__ import annotations
 import math
 import re
 
+import pandas as pd
 from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
 from pyspark.sql import Row
@@ -22,8 +23,10 @@ from az_datapipeline_sentiment_analysis_spark.functions.text import (
     NEGATIVE_WORDS,
     POS_THRESHOLD,
     POSITIVE_WORDS,
+    _score_series,
     fingerprint_expr,
     sentiment_components_expr,
+    sentiment_confidence_expr,
     sentiment_label_expr,
 )
 from az_datapipeline_sentiment_analysis_spark.operators import dedup as dd
@@ -51,26 +54,35 @@ SLOW_OK = settings(
 @given(texts=TEXTS)
 @SLOW_OK
 def test_sentiment_label_matches_python_model(spark, texts):
+    """The JVM scorer and the Arrow UDF's in-process scorer both give
+    the Python model's label and confidence for every text."""
     df = spark.createDataFrame([Row(i=i, text=t) for i, t in enumerate(texts)])
     pos, neg = sentiment_components_expr("text")
     got = {
-        r.i: r.label
-        for r in df.select("i", sentiment_label_expr(pos, neg).alias("label")).collect()
+        r.i: (r.label, r.confidence)
+        for r in df.select(
+            "i",
+            sentiment_label_expr(pos, neg).alias("label"),
+            sentiment_confidence_expr(pos, neg).alias("confidence"),
+        ).collect()
     }
+    arrow = _score_series(pd.Series(texts))
     pat = re.compile("[a-z]+")
     for i, t in enumerate(texts):
         toks = pat.findall(t.lower())
         p = sum(w in POSITIVE_WORDS for w in toks)
         n = sum(w in NEGATIVE_WORDS for w in toks)
         if p + n == 0:
-            want = "neutral"
+            want = ("neutral", 0.5)
         elif p / (p + n) >= POS_THRESHOLD:
-            want = "positive"
+            want = ("positive", round(p / (p + n), 6))
         elif p / (p + n) <= NEG_THRESHOLD:
-            want = "negative"
+            want = ("negative", round(p / (p + n), 6))
         else:
-            want = "mixed"
+            want = ("mixed", round(p / (p + n), 6))
         assert got[i] == want, (t, got[i], want)
+        a = arrow.iloc[i]
+        assert (a.sentiment, a.confidenceScores["positive"]) == want, (t, a, want)
 
 
 @given(texts=TEXTS)

@@ -94,9 +94,17 @@ def test_write_sorted_gives_disjoint_file_ranges(spark, tmp_path):
 
     import pyarrow.parquet as pq
 
+    key = "spark.sql.parquet.outputTimestampType"
+    before = spark.conf.get(key, None)
     ev = table(spark, SF_SMOKE, "events").select("event_id", "ts", "value")
     path = str(tmp_path / "sorted_events")
     storage.write_sorted(ev, path, "ts", n_files=6)
+    # the writer's INT96 override must not leak into later writes
+    assert spark.conf.get(key, None) == before
+    storage.write_zorder(
+        ev, str(tmp_path / "zorder_events"), "event_id", "ts", n_files=4
+    )
+    assert spark.conf.get(key, None) == before
 
     ranges = []
     for f in glob.glob(path + "/*.parquet"):
