@@ -8,7 +8,7 @@ and Structured Streaming for the incremental path.
 
 Layout:
     session     SparkSession factory (AQE, Arrow, UTC, local-tuned)
-    catalog     testdata table loading (schemas read from parquet footers)
+    catalog     testdata table loading (schemas declared from parquet footers)
     schemas     StructTypes for the reference JSON payload
     functions/  scalar/text/array function library (JVM-first)
     operators/  composed operators: dedup, similarity, as-of, sessionize

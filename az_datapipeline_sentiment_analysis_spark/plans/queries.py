@@ -27,7 +27,6 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..catalog import table as _t
-from ..functions.arrays import cosine_expr
 from ..functions.text import (
     LANG_LEXICONS,
     NEG_THRESHOLD,
@@ -37,7 +36,6 @@ from ..functions.text import (
     STOPWORDS_EN,
     TOKEN_RE,
     alpha_ratio_expr,
-    fingerprint_expr,
     sentiment_components_expr,
     sentiment_confidence_expr,
     sentiment_label_expr,

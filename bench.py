@@ -473,6 +473,21 @@ HEADLINE = [
 ]
 
 
+# The round-1..3 headline set, frozen: `value` grows whenever the suite
+# widens, so this subtotal is the cross-round comparable.
+CORE25 = [
+    "q1_pricing_summary", "q3_shipping_priority", "q5_local_supplier",
+    "q6_forecast_revenue", "q8_market_share", "q10_returned_items",
+    "q13_customer_distribution", "q18_large_orders",
+    "q21_waiting_supplier", "join_broadcast", "join_inner_equi",
+    "asof_join", "range_join", "win_rank", "win_range_frame",
+    "window_tumbling", "time_rollup", "grouped_zscore",
+    "sentiment_score_sql", "sentiment_score", "dedup_fingerprint",
+    "minhash_neardup", "embed_cosine_topk", "tfidf_topterms",
+    "contamination_check",
+]
+
+
 # The first 14 entries of round 3's SCALE_HEADLINE, frozen BY NAME so
 # later insertions into the list cannot silently change what the
 # cross-round subtotal measures. (Round 3's full scale list also had
@@ -539,25 +554,12 @@ def main() -> None:
     except ValueError:
         sf_val = sf
 
-    # the round-1..3 headline set, frozen: `value` grows whenever the
-    # suite widens, so this subtotal is the cross-round comparable
-    core25 = [
-        "q1_pricing_summary", "q3_shipping_priority", "q5_local_supplier",
-        "q6_forecast_revenue", "q8_market_share", "q10_returned_items",
-        "q13_customer_distribution", "q18_large_orders",
-        "q21_waiting_supplier", "join_broadcast", "join_inner_equi",
-        "asof_join", "range_join", "win_rank", "win_range_frame",
-        "window_tumbling", "time_rollup", "grouped_zscore",
-        "sentiment_score_sql", "sentiment_score", "dedup_fingerprint",
-        "minhash_neardup", "embed_cosine_topk", "tfidf_topterms",
-        "contamination_check",
-    ]
     payload = {
         "metric": "headline_suite_seconds",
         "value": round(sum(timings.values()), 3),
         "unit": "sec",
         "core25_seconds": round(
-            sum(timings[n] for n in core25 if n in timings), 3
+            sum(timings[n] for n in CORE25 if n in timings), 3
         ),
         "queries": timings,
         "sf": sf_val,
@@ -709,7 +711,7 @@ def main() -> None:
         "unit": "sec",
         "sf": payload["sf"],
         "core25_seconds": payload["core25_seconds"],
-        "queries": {n: timings[n] for n in core25 if n in timings},
+        "queries": {n: timings[n] for n in CORE25 if n in timings},
         "full_payload": local_path,
         "noise_band_x": NOISE_BAND_X,
         "n_queries": len(timings),
